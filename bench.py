@@ -164,10 +164,12 @@ def _cpu_ticks() -> list[int]:
 
 def _steal_pct(t0: list[int], t1: list[int]) -> float:
     """Steal share (%) of all cpu ticks between two _cpu_ticks samples;
-    -1.0 when unavailable."""
+    -1.0 when unavailable.  The total sums fields 0-7 only (user ..
+    steal): the kernel already counts guest and guest_nice ticks
+    (fields 8-9) inside user and nice."""
     if not t0 or not t1 or len(t0) < 8 or len(t1) < 8:
         return -1.0
-    tot = sum(b - a for a, b in zip(t0, t1))
+    tot = sum(b - a for a, b in zip(t0[:8], t1[:8]))
     if tot <= 0:
         return -1.0
     return round(100.0 * (t1[7] - t0[7]) / tot, 2)

@@ -64,13 +64,18 @@ class SqlEmitter:
         """Inferred column types from the lazily-built DataFrame hubs —
         the emitter's analogue of the reference's build-time local-Spark
         type probes (importProject.py:81-111).  Empty without a session
-        (decimal normalization is then skipped in the artifact)."""
+        (decimal normalization is then skipped in the artifact).  Only
+        the schemas are read, so the hubs are not persisted: a persisted
+        plan stays in the CacheManager every ``newSession()`` shares and
+        would serve stale rows to a later build of the same sources."""
         if self.spark is None:
             return {}
         if self._dtypes is None:
             from dataforge_core_spark.runner import ProjectRunner
 
-            hubs = ProjectRunner(self.spark, self.project, self.subs).build()
+            hubs = ProjectRunner(
+                self.spark, self.project, self.subs, persist_hubs=False
+            ).build()
             self._dtypes = {n: dict(df.dtypes) for n, df in hubs.items()}
         return self._dtypes.get(source_name, {})
 

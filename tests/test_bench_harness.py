@@ -325,6 +325,10 @@ def test_steal_gauge_pure():
     t0 = [0] * 10
     t1 = [10, 0, 0, 70, 0, 0, 0, 20, 0, 0]  # 20% of 100 ticks stolen
     assert bench._steal_pct(t0, t1) == 20.0
+    # guest/guest_nice ticks (fields 8-9) are already inside user/nice:
+    # counting them again would dilute the share to 20/108
+    t1_guest = [10, 0, 0, 70, 0, 0, 0, 20, 5, 3]
+    assert bench._steal_pct(t0, t1_guest) == 20.0
     assert bench._steal_pct([], t1) == -1.0
     assert bench._steal_pct(t0, t0) == -1.0
     ticks = bench._cpu_ticks()

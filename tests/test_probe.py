@@ -159,3 +159,55 @@ def test_validate_cli_second_run_zero_probes(spark, tmp_path):
         assert probe.probe_stats["runs"] == runs_after_first
     finally:
         probe.set_probe_store(prev)
+
+
+def test_datatypes_table_does_not_shadow_probe_view(spark):
+    """A persistent table named ``datatypes`` in the current database
+    must not hide the probe fixture: the view is a session temp view,
+    which shadows the table, so a fresh session still probes the rule
+    to its correct type."""
+    from dataforge_core_spark import probe
+
+    # qualified, so the DDL never resolves to a session's temp view
+    table = f"`{spark.catalog.currentDatabase()}`.datatypes"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    spark.sql(f"CREATE TABLE {table} (x INT) USING parquet")
+    prev = probe.set_probe_store(None)
+    try:
+        res = probe.run_probe(
+            spark.newSession(), "[This].a + 1", {"This.a": "bigint"}
+        )
+        assert (res.status, res.data_type) == ("success", "bigint")
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        probe.set_probe_store(prev)
+
+
+def test_validate_project_never_lists_the_catalog(spark, monkeypatch):
+    """The probe view check is O(1) in the catalog's size: with
+    ``Catalog.listTables`` raising, validating the demo project on a
+    fresh session gives the same report rows and runs the same number
+    of probes as without the patch."""
+    from pyspark.sql.catalog import Catalog
+
+    from dataforge_core_spark import probe
+    from dataforge_core_spark.loader import load_project
+
+    project = load_project("projects/tpch_demo")
+    prev = probe.set_probe_store(None)
+    try:
+        runs0 = probe.probe_stats["runs"]
+        want = probe.validate_project(spark.newSession(), project)
+        want_runs = probe.probe_stats["runs"] - runs0
+
+        def no_listing(*args, **kwargs):
+            raise AssertionError("the probe layer listed the catalog")
+
+        monkeypatch.setattr(Catalog, "listTables", no_listing)
+        runs0 = probe.probe_stats["runs"]
+        got = probe.validate_project(spark.newSession(), project)
+        assert probe.probe_stats["runs"] - runs0 == want_runs
+    finally:
+        probe.set_probe_store(prev)
+    assert got == want
+    assert want_runs > 0

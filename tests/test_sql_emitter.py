@@ -98,3 +98,35 @@ def test_cli_build(tmp_path):
     )
     assert rc == 0
     assert (tmp_path / "target" / "run.sql").is_file()
+
+
+def test_emitter_type_inference_leaves_no_stale_cache(spark, sf_dir, tmp_path):
+    """The emitter reads only the hubs' schemas.  It must leave no
+    persisted plan in the CacheManager (shared by every
+    ``newSession()``): a later read of the same sources has to follow
+    the files, not rows cached before a source file was rewritten."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from dataforge_core_spark.loader import load_project
+    from dataforge_core_spark.runner import ProjectRunner
+    from dataforge_core_spark.sql_emitter import SqlEmitter
+
+    data = tmp_path / "data"
+    data.mkdir()
+    for name in os.listdir(sf_dir):
+        shutil.copyfile(os.path.join(sf_dir, name), data / name)
+    project = load_project("projects/tpch_demo")
+    subs = {"DATA_DIR": str(data)}
+    SqlEmitter(project, subs, spark=spark).emit_all(str(tmp_path / "target"))
+
+    def region_rows() -> int:
+        runner = ProjectRunner(spark, project, subs, persist_hubs=False)
+        return runner.build()["tpch_region"].count()
+
+    region = data / "region.parquet"
+    table = pq.read_table(region)
+    assert region_rows() == table.num_rows
+    pq.write_table(table.slice(0, table.num_rows - 1), region)
+    assert region_rows() == table.num_rows - 1

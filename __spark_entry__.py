@@ -229,19 +229,16 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dataforge_core_spark.session import session_key
+from dataforge_core_spark.session import stored
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:  # robust under by-path module loading
     sys.path.insert(0, _REPO)
 _PROJECT_DIR = os.path.join(_REPO, "projects", "tpch_demo")
 
-_hub_cache: dict = {}
-
 
 def _build(spark: SparkSession, sf_dir: str):
-    key = (session_key(spark), sf_dir)
-    if key not in _hub_cache:
+    def build():
         from dataforge_core_spark import ProjectRunner, load_project
 
         project = load_project(_PROJECT_DIR)
@@ -263,9 +260,9 @@ def _build(spark: SparkSession, sf_dir: str):
         # first-parse warmup on the giant statements), and the heap
         # bloat degraded the cache-served dedup lanes downstream.
         hubs = runner.build_checkpointed()
-        outs = runner.build_outputs(hubs)
-        _hub_cache[key] = (hubs, outs)
-    return _hub_cache[key]
+        return hubs, runner.build_outputs(hubs)
+
+    return stored(spark, sf_dir, "tpch_demo_hubs", build)
 
 
 def _canonical(df: DataFrame) -> DataFrame:

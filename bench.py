@@ -215,177 +215,15 @@ def _jvm_gauges(spark) -> dict:
         return {}
 
 
-def _clear_operator_caches(spark) -> None:
-    """Drop every operator-level cache so index builds measure cold."""
-    import __spark_entry__ as entry
-    from dataforge_core_spark.operators import (
-        dedup,
-        multimodal,
-        simhash,
-        similarity,
-        sketches,
-        text,
-        training,
-    )
-    from dataforge_core_spark.session import free_local_checkpoint
-
-    # the DSIR feature-bucket relation (checkpointed)
-    for _name, df in training._dsir_bkt_cache.values():
-        free_local_checkpoint(df)
-    training._dsir_bkt_cache.clear()
-    # the five-gate ingest verdict relation (checkpointed)
-    for df in training._ingest_base_cache.values():
-        free_local_checkpoint(df)
-    training._ingest_base_cache.clear()
-    # merge tables are plain tuples (the train loop frees its own
-    # blocks) — cleared so the timed train row measures a real build;
-    # the encode lane's (word, n_pieces) vocabulary is checkpointed
-    for df in text._bpe_wp_cache.values():
-        free_local_checkpoint(df)
-    text._bpe_wp_cache.clear()
-    text._bpe_cache.clear()
-    for _m, _u, _qv, _t, mdf, udf, cntdf in (
-        text._ppl_model_cache.values()
-    ):
-        free_local_checkpoint(mdf)
-        free_local_checkpoint(udf)
-        free_local_checkpoint(cntdf)
-    text._ppl_model_cache.clear()
-    # the per-document LM score relation (checkpointed, r15)
-    for _name, df in text._lm_scores_cache.values():
-        free_local_checkpoint(df)
-    text._lm_scores_cache.clear()
-    for hubs, _outs in entry._hub_cache.values():
-        for df in hubs.values():
-            free_local_checkpoint(df)
-    # both label caches hold localCheckpoint-ed frames — free the
-    # blocks eagerly (clear() alone leaves them to the async
-    # ContextCleaner, which lets superseded blocks linger through the
-    # timed phase)
-    for df in dedup._labels_cache.values():
-        free_local_checkpoint(df)
-    dedup._labels_cache.clear()
-    for df in dedup._full_labels_cache.values():
-        free_local_checkpoint(df)
-    dedup._full_labels_cache.clear()
-    for _p, _l, pos, lens in dedup._substr_cache.values():
-        free_local_checkpoint(pos)
-        free_local_checkpoint(lens)
-    dedup._substr_cache.clear()
-    for _b, _k, bands, kdf in dedup._nd_index_cache.values():
-        free_local_checkpoint(bands)
-        free_local_checkpoint(kdf)
-    dedup._nd_index_cache.clear()
-    for df in dedup._tokbase_cache.values():
-        free_local_checkpoint(df)
-    dedup._tokbase_cache.clear()
-    for df in dedup._ex_cache.values():
-        free_local_checkpoint(df)
-    dedup._ex_cache.clear()
-    for cache in (dedup._pairs_cache,):
-        for df in cache.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        cache.clear()
-    # the signature relation is checkpointed (narrow build) as of r15
-    for df in simhash._sig_cache.values():
-        free_local_checkpoint(df)
-    simhash._sig_cache.clear()
-    for df in simhash._salted_cache.values():
-        free_local_checkpoint(df)
-    simhash._salted_cache.clear()
-    similarity._v_cache.clear()
-    similarity._kmeans_cache.clear()
-    similarity._centroid_cache.clear()
-    # _pr_edges_cache holds views over the same checkpointed graph
-    # frames _knn_cache owns — free the blocks once, clear both
-    for df in similarity._knn_cache.values():
-        free_local_checkpoint(df)
-    similarity._knn_cache.clear()
-    similarity._pr_edges_cache.clear()
-    for _name, df in similarity._xq_cache.values():
-        free_local_checkpoint(df)
-    similarity._xq_cache.clear()
-    similarity._top_pc_cache.clear()
-    similarity._pc2_cache.clear()
-    similarity._pcs_cache.clear()
-    for _name, df in similarity._x2_cache.values():
-        free_local_checkpoint(df)
-    similarity._x2_cache.clear()
-    for _out, ckpts in similarity._kcore_cache.values():
-        for df in ckpts:
-            free_local_checkpoint(df)
-    similarity._kcore_cache.clear()
-    for _name, df in similarity._sq_cache.values():
-        free_local_checkpoint(df)
-    similarity._sq_cache.clear()
-    for _name, df in similarity._nprobe_scored_cache.values():
-        free_local_checkpoint(df)
-    similarity._nprobe_scored_cache.clear()
-    for _name, df in similarity._pq_curve_cache.values():
-        free_local_checkpoint(df)
-    similarity._pq_curve_cache.clear()
-    for _rn, _cn, _con, rs_df, cb_df, codes_df in (
-        similarity._trained_cb_cache.values()
-    ):
-        free_local_checkpoint(rs_df)
-        free_local_checkpoint(cb_df)
-        free_local_checkpoint(codes_df)
-    similarity._trained_cb_cache.clear()
-    for cache in (similarity._pq_codes_cache, similarity._rpq_codes_cache):
-        for _name, df in cache.values():
-            free_local_checkpoint(df)
-        cache.clear()
-    for df in multimodal._phash_cache.values():
-        free_local_checkpoint(df)
-    multimodal._phash_cache.clear()
-    # the stored salted LSH band tables (image + audio, per cap)
-    for df in multimodal._salted_bands_cache.values():
-        free_local_checkpoint(df)
-    multimodal._salted_bands_cache.clear()
-    for df in multimodal._afp_cache.values():
-        free_local_checkpoint(df)
-    multimodal._afp_cache.clear()
-    for _name, df in multimodal._phash_probe_cache.values():
-        free_local_checkpoint(df)
-    multimodal._phash_probe_cache.clear()
-    for _name, df in multimodal._afp_probe_cache.values():
-        free_local_checkpoint(df)
-    multimodal._afp_probe_cache.clear()
-    for df in multimodal._phash_clusters_cache.values():
-        free_local_checkpoint(df)
-    multimodal._phash_clusters_cache.clear()
-    for df in multimodal._afp_clusters_cache.values():
-        free_local_checkpoint(df)
-    multimodal._afp_clusters_cache.clear()
-    for _name, df in sketches._toks_cache.values():
-        free_local_checkpoint(df)
-    sketches._toks_cache.clear()
-    # the stored bottom-K sketch rows (r15)
-    for _name, df in sketches._bk_cache.values():
-        free_local_checkpoint(df)
-    sketches._bk_cache.clear()
-    for _name, df in sketches._hll_regs_cache.values():
-        free_local_checkpoint(df)
-    sketches._hll_regs_cache.clear()
-    for _m, _t, mat, topdf in sketches._cms_cache.values():
-        free_local_checkpoint(mat)
-        free_local_checkpoint(topdf)
-    sketches._cms_cache.clear()
-    entry._hub_cache.clear()
-    spark.catalog.clearCache()
-
-
-# Builder dependency edges: which builders' cached artifacts each one
+# Builder dependency edges: which builders' stored relations each one
 # consumes.  The index phase runs builders CONCURRENTLY (round-13: the
 # sequential phase cost 49-55s, most of it per-build JIT / scheduling
 # latency on otherwise idle executor threads; a real cluster submits
-# independent index jobs concurrently too).  Declared edges keep a
-# shared prologue from being raced into twice; conf-mutating builds
-# (the CC label loops, the k-means Lloyd loop) additionally serialize
-# their shuffle-width override through session.shuffle_override's lock.
+# independent index jobs concurrently too).  The edges are a SCHEDULING
+# ORDER only: a builder starts after the builders whose relations it
+# reads, so it does not sit blocked on their build locks.  What keeps a
+# shared relation from being built twice is session.stored's per-key
+# lock, not the edges.
 _INDEX_DEPS: dict[str, list[str]] = {
     "engine_hub_compile": [],
     "token_base": [],
@@ -396,13 +234,12 @@ _INDEX_DEPS: dict[str, list[str]] = {
     "near_dedup_probe_index": ["dedup_minhash_pairs"],
     "simhash_signatures": ["token_base"],
     "simhash_salted_bands": ["simhash_signatures"],
-    # review fix (r13): _toks_view derives from dedup._ex_df — without
-    # the edge, kmv and the shingle builders race the unguarded
-    # _ex_cache/_tokbase_cache check-then-act at phase start
     "ann_normed": [],
     "ann_sq_codes": ["ann_normed"],
     "ann_knn_edges": ["ann_normed"],
     "ann_kcore_peel": ["ann_knn_edges"],
+    # _toks_view derives from dedup._ex_df: kmv is scheduled after the
+    # shingle builder that stores it
     "kmv_shingle_toks": ["dedup_shingles"],
     "kmv_bottomk": ["kmv_shingle_toks"],
     "cms_matrix": ["token_base"],
@@ -425,7 +262,7 @@ _INDEX_DEPS: dict[str, list[str]] = {
     "afp_cluster_labels": ["audio_afp_index"],
     "afp_salted_bands": ["audio_afp_index"],
     "train_bpe_merge_train": [],
-    # review fix (r13): text._ppl_model reads dedup._token_base_view
+    # text._ppl_model reads dedup._token_base_view
     "ppl_gate_model": ["token_base"],
     "lm_doc_scores": ["token_base"],
     "dsir_bucket_rows": [],
@@ -690,7 +527,7 @@ def _index_builders():
             ).count(),
         ),
         # the audio dup-cluster labels (CC over the fingerprint pair
-        # graph, cached in multimodal._afp_clusters_cache)
+        # graph, stored by multimodal.multimodal_audio_clusters)
         (
             "afp_cluster_labels",
             lambda s: multimodal.multimodal_audio_clusters(
@@ -698,7 +535,7 @@ def _index_builders():
             ).count(),
         ),
         # the image dup-cluster labels (CC over the phash pair graph,
-        # cached in multimodal._phash_clusters_cache)
+        # stored by multimodal.multimodal_phash_clusters)
         (
             "phash_cluster_labels",
             lambda s: multimodal.multimodal_phash_clusters(
@@ -739,7 +576,7 @@ def _index_builders():
 
 
 def main() -> None:
-    from dataforge_core_spark.session import get_spark
+    from dataforge_core_spark.session import clear_stored, get_spark
 
     import __spark_entry__ as entry
 
@@ -818,7 +655,7 @@ def main() -> None:
 
     # Phase 2: shared index builds, timed cold (concurrent where the
     # dependency edges allow — see _run_index_builds).
-    _clear_operator_caches(spark)
+    clear_stored(spark)
     index_build, index_wall = _run_index_builds(spark)
 
     # Phase 3: queries, indexes warm.  Each lane also records its

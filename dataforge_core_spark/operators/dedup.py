@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from dataforge_core_spark.session import (
     free_local_checkpoint,
     session_key,
+    stored,
 )
 
 MINHASH_N = 12  # signature length
@@ -148,9 +149,6 @@ def _duck_ex_sql() -> str:
     """
 
 
-_ex_cache: dict = {}
-
-
 def _ex_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (doc_id, shingle-hash) relation, persisted once per
     (session, sf) — the shared base of minhash and n-gram Jaccard.
@@ -167,8 +165,7 @@ def _ex_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     real multi-file corpus the scan is already parallel.  At 100 TB the
     persist becomes a parquet checkpoint keyed by doc partition.
     """
-    key = (session_key(spark), sf_dir)
-    if key not in _ex_cache:
+    def build():
         from pyspark.sql import functions as F
         from pyspark.sql.window import Window
 
@@ -187,17 +184,14 @@ def _ex_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         # persist vs 0.44s checkpointed at sf0.1 warm; the checkpoint
         # truncates lineage to the materialized blocks so every consumer
         # is a LogicalRDD scan (same rule as _normed / _token_base)
-        ex = (
+        return (
             sh.filter("ok")
             .selectExpr("doc_id", f"{_SPARK_H} AS s")
             .distinct()
             .localCheckpoint(eager=True)
         )
-        _ex_cache[key] = ex
-    return _ex_cache[key]
 
-
-_tokbase_cache: dict = {}
+    return stored(spark, sf_dir, "dedup_ex", build)
 
 
 def _token_base(spark: SparkSession, sf_dir: str):
@@ -213,13 +207,12 @@ def _token_base(spark: SparkSession, sf_dir: str):
     partitioned by doc rather than a localCheckpoint).  pos is 0-based
     (posexplode), matching the sequence(0, n-w) convention of the
     substring SQL."""
-    key = (session_key(spark), sf_dir)
-    if key not in _tokbase_cache:
+    def build():
         from pyspark.sql import functions as F
 
         par = spark.sparkContext.defaultParallelism
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        base = (
+        return (
             docs.repartition(par, "doc_id")
             .select(
                 "doc_id",
@@ -227,8 +220,8 @@ def _token_base(spark: SparkSession, sf_dir: str):
             )
             .localCheckpoint(eager=True)
         )
-        _tokbase_cache[key] = base
-    return _tokbase_cache[key]
+
+    return stored(spark, sf_dir, "token_base", build)
 
 
 def _token_base_view(spark: SparkSession, sf_dir: str) -> str:
@@ -301,9 +294,6 @@ def _jaccard_verify(ex: DataFrame, cand: DataFrame) -> DataFrame:
 MAX_BAND_BUCKET = 1000
 
 
-_pairs_cache: dict = {}
-
-
 def dedup_minhash(
     spark: SparkSession,
     sf_dir: str,
@@ -362,16 +352,22 @@ def _verified_pairs(
 ) -> DataFrame:
     """Verified near-dup pairs WITH their integer basis
     (inter_n, n_a, n_b), persisted per (session, sf, cap, layout)."""
-    from pyspark.sql import functions as F
-
     if bands_n < 1 or rows_n < 1 or bands_n * rows_n > MINHASH_N:
         raise ValueError(
             f"LSH layout {bands_n}x{rows_n} exceeds the "
             f"{MINHASH_N}-column signature"
         )
-    key = (session_key(spark), sf_dir, cap, bands_n, rows_n)
-    if key in _pairs_cache:
-        return _pairs_cache[key]
+    return stored(
+        spark, sf_dir, "verified_pairs",
+        lambda: _build_verified_pairs(spark, sf_dir, cap, bands_n, rows_n),
+        cap, bands_n, rows_n,
+    )
+
+
+def _build_verified_pairs(
+    spark: SparkSession, sf_dir: str, cap: int, bands_n: int, rows_n: int
+) -> DataFrame:
+    from pyspark.sql import functions as F
 
     ex = _ex_df(spark, sf_dir)
     sig = _minhash_sig_df(spark, sf_dir)
@@ -409,9 +405,7 @@ def _verified_pairs(
         )
         .distinct()
     )
-    out = _jaccard_verify(ex, cand).persist()
-    _pairs_cache[key] = out
-    return out
+    return _jaccard_verify(ex, cand).persist()
 
 
 def _minhash_chain(
@@ -751,9 +745,6 @@ def scalar_sig_exprs() -> tuple[str, list[str]]:
     return hs, sig
 
 
-_nd_index_cache: dict = {}
-
-
 def _near_dedup_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """(band view, exact-key view): the corpus-side probe index of the
     STREAMING near-dedup gate (streaming_rows.stream_near_dedup).
@@ -772,8 +763,7 @@ def _near_dedup_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     stored dedup index a continuous ingest probes."""
     from pyspark.sql import functions as F
 
-    key = (session_key(spark), sf_dir)
-    if key not in _nd_index_cache:
+    def build():
         corp = f"doc_id % {INCR_MOD} < {INCR_NEW_GE}"
         ex = _ex_df(spark, sf_dir).filter(corp)
         # pre-partitioned pack — see _jaccard_verify
@@ -804,12 +794,13 @@ def _near_dedup_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .distinct()
             .localCheckpoint(eager=True)
         )
-        tag = abs(hash(key)) % 10**8
+        tag = abs(hash((session_key(spark), sf_dir))) % 10**8
         bname, kname = f"nd_bands_{tag}", f"nd_keys_{tag}"
         bands.createOrReplaceTempView(bname)
         kdf.createOrReplaceTempView(kname)
-        _nd_index_cache[key] = (bname, kname, bands, kdf)
-    return _nd_index_cache[key][0], _nd_index_cache[key][1]
+        return bname, kname, bands, kdf
+
+    return stored(spark, sf_dir, "near_dedup_index", build)[:2]
 
 
 def dedup_index_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -981,10 +972,6 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _full_labels(spark, sf_dir, pointer_doubling=False)
 
 
-_labels_cache: dict = {}
-_full_labels_cache: dict = {}
-
-
 def _full_labels(
     spark: SparkSession, sf_dir: str, pointer_doubling: bool
 ) -> DataFrame:
@@ -998,13 +985,13 @@ def _full_labels(
     a single ExistingRDD scan; at 100 TB this is the written
     cluster-assignment table a real dedup pipeline persists between
     stages."""
-    key = (session_key(spark), sf_dir, pointer_doubling)
-    if key not in _full_labels_cache:
-        full = _attach_singletons(
+    return stored(
+        spark, sf_dir, "full_labels",
+        lambda: _attach_singletons(
             spark, sf_dir, _cluster_labels(spark, sf_dir, pointer_doubling)
-        ).localCheckpoint(eager=True)
-        _full_labels_cache[key] = full
-    return _full_labels_cache[key]
+        ).localCheckpoint(eager=True),
+        pointer_doubling,
+    )
 
 
 def _cluster_labels(
@@ -1015,13 +1002,13 @@ def _cluster_labels(
     downstream consumer (cluster rows, keep-best selection) reads the
     same checkpointed frame instead of re-running the propagation
     loop."""
-    key = (session_key(spark), sf_dir, pointer_doubling)
-    if key not in _labels_cache:
-        labels, _ = _cc_min_label(
+    return stored(
+        spark, sf_dir, "cluster_labels",
+        lambda: _cc_min_label(
             dedup_minhash(spark, sf_dir), pointer_doubling=pointer_doubling
-        )
-        _labels_cache[key] = labels
-    return _labels_cache[key]
+        )[0],
+        pointer_doubling,
+    )
 
 
 def _cc_min_label(
@@ -1701,8 +1688,6 @@ _BOILERPLATE_ORACLE = _boilerplate_sql("duck")
 
 SUBSTR_WIN = 8  # tokens; >= 2 occurrences of a window marks it duplicated
 
-_substr_cache: dict = {}
-
 
 def _substr_views(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """(positions view, doc-length view): the localCheckpoint-ed
@@ -1715,12 +1700,12 @@ def _substr_views(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     Same recipe as dedup._ex_df / sketches._toks_view; the repartition
     spreads the single-file scan."""
     w = SUBSTR_WIN
-    key = (session_key(spark), sf_dir)
-    if key not in _substr_cache:
+
+    def build():
         from pyspark.sql import functions as F
         from pyspark.sql.window import Window
 
-        tag = abs(hash(key)) % 10**8
+        tag = abs(hash((session_key(spark), sf_dir))) % 10**8
         # derived from the shared token base (one corpus tokenize pass
         # for the whole index phase): the w-gram at 0-based position i
         # is the window of leads 0..w-1 over (doc_id, pos) — identical
@@ -1749,8 +1734,9 @@ def _substr_views(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         pname, lname = f"substr_pos_{tag}", f"substr_len_{tag}"
         pos.createOrReplaceTempView(pname)
         lens.createOrReplaceTempView(lname)
-        _substr_cache[key] = (pname, lname, pos, lens)
-    return _substr_cache[key][0], _substr_cache[key][1]
+        return pname, lname, pos, lens
+
+    return stored(spark, sf_dir, "substr", build)[:2]
 
 
 def _substring_sql(

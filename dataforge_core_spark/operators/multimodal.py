@@ -1032,19 +1032,15 @@ def image_phash_fn():
     return phash
 
 
-_phash_cache: dict = {}
-
-
 def _phash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed (doc_id, phash) relation — the stored image-hash
     index.  The Python decode+hash pass runs ONCE per (session, sf);
     the group-count lane and the banded near-dup lane both serve from
     the checkpointed frame (at 100 TB the image decode is the dominant
     cost, so every consumer must ride one pass over the bytes)."""
-    from dataforge_core_spark.session import session_key
+    from dataforge_core_spark.session import stored
 
-    key = (session_key(spark), sf_dir)
-    if key not in _phash_cache:
+    def build():
         synth, ph = image_synth_fn(), image_phash_fn()
 
         def fused(batches):
@@ -1054,8 +1050,9 @@ def _phash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id"
         )
         hashed = docs.mapInPandas(fused, "doc_id bigint, phash bigint")
-        _phash_cache[key] = hashed.localCheckpoint(eager=True)
-    return _phash_cache[key]
+        return hashed.localCheckpoint(eager=True)
+
+    return stored(spark, sf_dir, "phash", build)
 
 
 def multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1282,9 +1279,6 @@ def _phash_neardup_body(dialect: str, src: str, cap: int) -> str:
     return _hash_neardup_body(dialect, src, cap)
 
 
-_phash_probe_cache: dict = {}
-
-
 def _phash_probe_index(spark: SparkSession, sf_dir: str) -> str:
     """Checkpointed CORPUS-side band table (bno, blk, cphash) for the
     streaming image gate — corpus docs only (the dedup_incremental
@@ -1292,10 +1286,11 @@ def _phash_probe_index(spark: SparkSession, sf_dir: str) -> str:
     like the minhash probe index (stream_near_dedup's corpb), so an
     incoming image probes at most PHASH_BANDS * cap candidates."""
     from dataforge_core_spark.operators.dedup import INCR_MOD, INCR_NEW_GE
-    from dataforge_core_spark.session import session_key
+    from dataforge_core_spark.session import session_key, stored
 
     key = (session_key(spark), sf_dir)
-    if key not in _phash_probe_cache:
+
+    def build():
         view = f"phash_src_{abs(hash(key)) % 10**8}"
         _phash_df(spark, sf_dir).createOrReplaceTempView(view)
         df = spark.sql(
@@ -1316,11 +1311,9 @@ def _phash_probe_index(spark: SparkSession, sf_dir: str) -> str:
         ).localCheckpoint(eager=True)
         name = f"phash_probe_{abs(hash(key)) % 10**8}"
         df.createOrReplaceTempView(name)
-        _phash_probe_cache[key] = (name, df)
-    return _phash_probe_cache[key][0]
+        return name, df
 
-
-_salted_bands_cache: dict = {}
+    return stored(spark, sf_dir, "phash_probe", build)[0]
 
 
 def _salted_hash_bands(
@@ -1336,7 +1329,7 @@ def _salted_hash_bands(
     a media-dedup deployment probes."""
     from pyspark.sql import functions as F
 
-    from dataforge_core_spark.session import session_key
+    from dataforge_core_spark.session import stored
 
     bands_n, bits = (
         (PHASH_BANDS, _PHASH_BAND_BITS)
@@ -1344,8 +1337,8 @@ def _salted_hash_bands(
         else (AFP_BANDS, _AFP_BAND_BITS)
     )
     src = _phash_df if col == "phash" else _afp_df
-    key = (session_key(spark), sf_dir, col, cap)
-    if key not in _salted_bands_cache:
+
+    def build():
         bands = src(spark, sf_dir).selectExpr(
             "doc_id",
             col,
@@ -1369,8 +1362,9 @@ def _salted_hash_bands(
             col,
             F.expr("doc_id % coalesce(nsalt, 1)").alias("salt"),
         )
-        _salted_bands_cache[key] = salted.localCheckpoint(eager=True)
-    return _salted_bands_cache[key]
+        return salted.localCheckpoint(eager=True)
+
+    return stored(spark, sf_dir, "media_salted_bands", build, col, cap)
 
 
 def _neardup_from_salted_sql(
@@ -1468,9 +1462,6 @@ WITH {_phash_h_ctes()},
 """
 
 
-_phash_clusters_cache: dict = {}
-
-
 def multimodal_phash_clusters(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1489,11 +1480,10 @@ def multimodal_phash_clusters(
     from pyspark.sql import functions as F
 
     from dataforge_core_spark.operators.dedup import _cc_min_label
-    from dataforge_core_spark.session import session_key
+    from dataforge_core_spark.session import session_key, stored
 
-    key = (session_key(spark), sf_dir)
-    if key not in _phash_clusters_cache:
-        view = f"phash_cl_{abs(hash(key)) % 10**8}"
+    def build():
+        view = f"phash_cl_{abs(hash((session_key(spark), sf_dir))) % 10**8}"
         _phash_df(spark, sf_dir).createOrReplaceTempView(view)
         hsrc = (
             f"(SELECT DISTINCT phash AS doc_id, phash FROM {view})"
@@ -1523,8 +1513,9 @@ def multimodal_phash_clusters(
             .select(F.col("d").alias("doc_id"), "cluster_id")
             .localCheckpoint(eager=True)
         )
-        _phash_clusters_cache[key] = out
-    return _phash_clusters_cache[key]
+        return out
+
+    return stored(spark, sf_dir, "phash_clusters", build)
 
 
 def _phash_clusters_oracle() -> str:
@@ -1758,17 +1749,13 @@ def afp_fp_fn():
     return fp
 
 
-_afp_cache: dict = {}
-
-
 def _afp_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed (doc_id, afp) relation — the stored audio
     fingerprint index (one fused synth+parse+fingerprint Arrow pass
     per session, like the image hash index)."""
-    from dataforge_core_spark.session import session_key
+    from dataforge_core_spark.session import stored
 
-    key = (session_key(spark), sf_dir)
-    if key not in _afp_cache:
+    def build():
         synth, fp = afp_synth_fn(), afp_fp_fn()
 
         def fused(batches):
@@ -1778,8 +1765,9 @@ def _afp_df(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id"
         )
         fps = docs.mapInPandas(fused, "doc_id bigint, afp bigint")
-        _afp_cache[key] = fps.localCheckpoint(eager=True)
-    return _afp_cache[key]
+        return fps.localCheckpoint(eager=True)
+
+    return stored(spark, sf_dir, "afp", build)
 
 
 def multimodal_audio_fingerprint(
@@ -1860,9 +1848,6 @@ WITH {_afp_h_ctes()},
 """
 
 
-_afp_probe_cache: dict = {}
-
-
 def _afp_probe_index(spark: SparkSession, sf_dir: str) -> str:
     """Checkpointed CORPUS-side band table (bno, blk, cafp) for the
     streaming audio gate — corpus docs only (the dedup_incremental
@@ -1870,10 +1855,11 @@ def _afp_probe_index(spark: SparkSession, sf_dir: str) -> str:
     like the image probe index, so an incoming track probes at most
     AFP_BANDS * cap candidates."""
     from dataforge_core_spark.operators.dedup import INCR_MOD, INCR_NEW_GE
-    from dataforge_core_spark.session import session_key
+    from dataforge_core_spark.session import session_key, stored
 
     key = (session_key(spark), sf_dir)
-    if key not in _afp_probe_cache:
+
+    def build():
         view = f"afp_src_{abs(hash(key)) % 10**8}"
         _afp_df(spark, sf_dir).createOrReplaceTempView(view)
         blocks = _hash_blocks_expr("afp", AFP_BANDS, _AFP_BAND_BITS)
@@ -1894,11 +1880,9 @@ def _afp_probe_index(spark: SparkSession, sf_dir: str) -> str:
         ).localCheckpoint(eager=True)
         name = f"afp_probe_{abs(hash(key)) % 10**8}"
         df.createOrReplaceTempView(name)
-        _afp_probe_cache[key] = (name, df)
-    return _afp_probe_cache[key][0]
+        return name, df
 
-
-_afp_clusters_cache: dict = {}
+    return stored(spark, sf_dir, "afp_probe", build)[0]
 
 
 def multimodal_audio_clusters(
@@ -1916,11 +1900,10 @@ def multimodal_audio_clusters(
     from pyspark.sql import functions as F
 
     from dataforge_core_spark.operators.dedup import _cc_min_label
-    from dataforge_core_spark.session import session_key
+    from dataforge_core_spark.session import session_key, stored
 
-    key = (session_key(spark), sf_dir)
-    if key not in _afp_clusters_cache:
-        view = f"afp_cl_{abs(hash(key)) % 10**8}"
+    def build():
+        view = f"afp_cl_{abs(hash((session_key(spark), sf_dir))) % 10**8}"
         _afp_df(spark, sf_dir).createOrReplaceTempView(view)
         hsrc = f"(SELECT DISTINCT afp AS doc_id, afp FROM {view})"
         pairs = spark.sql(
@@ -1949,8 +1932,9 @@ def multimodal_audio_clusters(
             .select(F.col("d").alias("doc_id"), "cluster_id")
             .localCheckpoint(eager=True)
         )
-        _afp_clusters_cache[key] = out
-    return _afp_clusters_cache[key]
+        return out
+
+    return stored(spark, sf_dir, "afp_clusters", build)
 
 
 def _afp_clusters_oracle() -> str:

@@ -18,7 +18,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dataforge_core_spark.session import session_key
+from dataforge_core_spark.session import session_key, stored
 
 HAMMING_MAX = 12
 _HEX = "0123456789abcdef"
@@ -225,9 +225,6 @@ def _pairs_sql(
         """
 
 
-_sig_cache: dict = {}
-
-
 def _sig_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed signature relation — the band self-join references
     it twice; without the materialization Spark recomputes the full
@@ -249,16 +246,16 @@ def _sig_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     the isolation and the fast shape (measured 0.197 vs 0.349 warm
     interleaved at sf0.1).  At 100 TB the same rule sizes the stored
     index's width to the signature count, not the scan width."""
-    key = (session_key(spark), sf_dir)
-    if key not in _sig_cache:
+    def build():
         from dataforge_core_spark.session import narrow_session, rebind
 
         ns = narrow_session(spark, 8)
         sig = _sig_build_df(spark, sf_dir, session=ns).localCheckpoint(
             eager=True
         )
-        _sig_cache[key] = rebind(sig, spark)
-    return _sig_cache[key]
+        return rebind(sig, spark)
+
+    return stored(spark, sf_dir, "simhash_sig", build)
 
 
 def _sig_build_df(
@@ -286,9 +283,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sig_df(spark, sf_dir)
 
 
-_salted_cache: dict = {}
-
-
 def _salted_bands(
     spark: SparkSession, sf_dir: str, cap: int
 ) -> DataFrame:
@@ -300,8 +294,7 @@ def _salted_bands(
     like the kNN edge list."""
     from pyspark.sql import functions as F
 
-    key = (session_key(spark), sf_dir, cap)
-    if key not in _salted_cache:
+    def build():
         sig = _sig_df(spark, sf_dir)
         bands = sig.selectExpr(
             "doc_id",
@@ -337,8 +330,9 @@ def _salted_bands(
             "h_lo",
             F.expr("doc_id % coalesce(nsalt, 1)").alias("salt"),
         )
-        _salted_cache[key] = salted.localCheckpoint(eager=True)
-    return _salted_cache[key]
+        return salted.localCheckpoint(eager=True)
+
+    return stored(spark, sf_dir, "simhash_salted", build, cap)
 
 
 def dedup_simhash_pairs(

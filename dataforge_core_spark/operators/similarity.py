@@ -22,7 +22,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dataforge_core_spark.session import session_key
+from dataforge_core_spark.session import session_key, stored
 
 TOP_K = 10
 N_QUERIES = 8  # vec_id < N_QUERIES form the query set
@@ -77,9 +77,6 @@ def _duck_cosine(a: str, b: str, na: str, nb: str) -> str:
     return f"({_unrolled_dot(a, b, 'duck')}) / ({na} * {nb})"
 
 
-_v_cache: dict = {}
-
-
 def _normed(spark: SparkSession, sf_dir: str) -> str:
     """Persisted (vec_id, label, emb, nrm, bucket) relation.
 
@@ -100,7 +97,8 @@ def _normed(spark: SparkSession, sf_dir: str) -> str:
     parquet index replaces it.
     """
     key = (session_key(spark), sf_dir)
-    if key not in _v_cache:
+
+    def build():
         # full session width ON PURPOSE (r15 measured-and-rejected:
         # sizing this to the relation like the simhash band table made
         # the ANN lanes 2x SLOWER — their per-row work is compute-dense
@@ -125,8 +123,10 @@ def _normed(spark: SparkSession, sf_dir: str) -> str:
         ).localCheckpoint(eager=True)
         name = f"embeddings_normed_{abs(hash(key)) % 10**8}"
         v.createOrReplaceTempView(name)
-        _v_cache[key] = name
-    return _v_cache[key]
+        # the frame rides along so clear_stored frees its checkpoint
+        return name, v
+
+    return stored(spark, sf_dir, "normed", build)[0]
 
 
 # DuckDB-side equivalent of _normed's projection (shared by all oracles).
@@ -542,9 +542,6 @@ def _kmeans_ctes(v: str, dialect: str) -> str:
     return ",\n".join(parts)
 
 
-_kmeans_cache: dict = {}
-
-
 def _centroid_literal_sql(rows) -> str:
     """8-row centroid relation as a SQL literal (cid, emb, cc).
 
@@ -581,10 +578,16 @@ def _kmeans_assignments(spark: SparkSession, sf_dir: str) -> str:
     iteration.  The math is unchanged — the DuckDB oracle still runs
     the fully-inlined chain (_kmeans_ctes) and matches bit-for-bit
     (see _centroid_literal_sql for why the round-trip is exact)."""
-    key = (session_key(spark), sf_dir)
-    if key not in _kmeans_cache:
+    return _kmeans_stored(spark, sf_dir)[0]
+
+
+def _kmeans_stored(spark: SparkSession, sf_dir: str):
+    """(assignment view, centroid view, centroid rows, assignment
+    frame) of the IVF index — see _kmeans_assignments."""
+
+    def build():
         v = _normed(spark, sf_dir)
-        tag = abs(hash(key)) % 10**8
+        tag = abs(hash((session_key(spark), sf_dir))) % 10**8
         cview = f"kmeans_c_{tag}"
         # the per-iteration frames are K-group aggregates over ~corpus/K
         # rows — size the build's shuffle width to that, not the session
@@ -630,19 +633,19 @@ def _kmeans_assignments(spark: SparkSession, sf_dir: str) -> str:
         spark.sql(_centroid_literal_sql(cent)).createOrReplaceTempView(
             cview
         )
-        # the collected centroid rows ride in the cache too: probe
+        # the collected centroid rows are stored too: probe
         # expressions can then be emitted as pure literal projections
         # (no join at all — see _probe_cids_expr)
-        _kmeans_cache[key] = (name, cview, [
+        return name, cview, [
             (int(r["cid"]), [float(x) for x in r["emb"]]) for r in cent
-        ])
-    return _kmeans_cache[key][0]
+        ], df
+
+    return stored(spark, sf_dir, "kmeans", build)
 
 
 def _kmeans_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """(assignment view, final centroid view) for the IVF index."""
-    _kmeans_assignments(spark, sf_dir)
-    return _kmeans_cache[(session_key(spark), sf_dir)][:2]
+    return _kmeans_stored(spark, sf_dir)[:2]
 
 
 def _kmeans_centroids(
@@ -650,8 +653,7 @@ def _kmeans_centroids(
 ) -> list[tuple[int, list[float]]]:
     """Final (cid, components) centroid rows of the stored IVF index —
     exact binary64 values (collect round-trips doubles bit-exactly)."""
-    _kmeans_assignments(spark, sf_dir)
-    return _kmeans_cache[(session_key(spark), sf_dir)][2]
+    return _kmeans_stored(spark, sf_dir)[2]
 
 
 def _py_tree_dot(a: list[float], b: list[float]) -> float:
@@ -1238,13 +1240,11 @@ def _sq_dot(qa: str, ca: str, dialect: str) -> str:
     return terms[0]
 
 
-_sq_cache: dict = {}
-
-
 def _sq_index_view(spark: SparkSession, sf_dir: str) -> str:
     """Temp-view name of the checkpointed SQ8 code table."""
     key = (session_key(spark), sf_dir)
-    if key not in _sq_cache:
+
+    def build():
         v = _normed(spark, sf_dir)
         max_abs, arr, scale = _sq_exprs("emb", "spark")
         idx = spark.sql(
@@ -1255,8 +1255,9 @@ def _sq_index_view(spark: SparkSession, sf_dir: str) -> str:
         ).localCheckpoint(eager=True)
         name = f"sq_index_{abs(hash(key)) % 10**8}"
         idx.createOrReplaceTempView(name)
-        _sq_cache[key] = (name, idx)
-    return _sq_cache[key][0]
+        return name, idx
+
+    return stored(spark, sf_dir, "sq_index", build)[0]
 
 
 def ann_sq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1333,9 +1334,6 @@ KNN_K = 5
 KNN_CELL_CAP = 100_000
 
 
-_knn_cache: dict = {}
-
-
 def ann_knn_graph(
     spark: SparkSession, sf_dir: str, cell_cap: int | None = None
 ) -> DataFrame:
@@ -1346,12 +1344,12 @@ def ann_knn_graph(
     triangle count, and the graph lane itself all read; an explicit
     ``cell_cap`` (tests, dials) bypasses the cache and computes raw."""
     if cell_cap is None:
-        key = (session_key(spark), sf_dir)
-        if key not in _knn_cache:
-            _knn_cache[key] = _knn_graph_raw(
+        return stored(
+            spark, sf_dir, "knn_graph",
+            lambda: _knn_graph_raw(
                 spark, sf_dir, KNN_CELL_CAP
-            ).localCheckpoint(eager=True)
-        return _knn_cache[key]
+            ).localCheckpoint(eager=True),
+        )
     return _knn_graph_raw(spark, sf_dir, cell_cap)
 
 
@@ -1557,8 +1555,6 @@ PR_SCALE = 1_000_000
 PR_ITERS = 3
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100
 
-_pr_edges_cache: dict = {}
-
 
 def _pagerank_tail(idiv: str, edges: str, mat: str = "") -> str:
     """The shared post-edges CTE chain: nodes/outd/r0 -> rK, one CTE
@@ -1620,17 +1616,18 @@ def _knn_edges_view(spark: SparkSession, sf_dir: str) -> str:
     built once per (session, sf) — the shared graph index of the
     PageRank and triangle-count lanes."""
     key = (session_key(spark), sf_dir)
-    if key not in _pr_edges_cache:
+
+    def build():
         # the graph itself is already checkpointed (ann_knn_graph's
-        # default-cap cache); the view is a cheap projection over the
-        # materialized blocks.  The frame rides along so cache-clearers
-        # can free those blocks (the view name alone can't).
+        # default-cap entry); the view is a cheap projection over the
+        # materialized blocks.
         graph = ann_knn_graph(spark, sf_dir)
         edges = graph.select("src", "dst")
         name = f"pr_edges_{abs(hash(key)) % 10**8}"
         edges.createOrReplaceTempView(name)
-        _pr_edges_cache[key] = (name, graph)
-    return _pr_edges_cache[key][0]
+        return name
+
+    return stored(spark, sf_dir, "knn_edges_view", build)
 
 
 def ann_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1796,9 +1793,6 @@ GROUP BY t.node, k.node"""
     )
 
 
-_kcore_cache: dict = {}
-
-
 def ann_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree + KCORE_ROUNDS-round k-core membership per graph node.
 
@@ -1814,11 +1808,15 @@ def ann_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same recipe as the CC label loop and the index tables.  The
     oracle runs the identical algebra as one MATERIALIZED-pinned CTE
     chain (_kcore_tail)."""
-    key = (session_key(spark), sf_dir)
-    if key in _kcore_cache:
-        return _kcore_cache[key][0]
+    return stored(
+        spark, sf_dir, "kcore", lambda: _kcore_build(spark, sf_dir)
+    )[0]
+
+
+def _kcore_build(spark: SparkSession, sf_dir: str):
+    """(degree/membership frame, every peel-round checkpoint)."""
     edges = _knn_edges_view(spark, sf_dir)
-    tag = abs(hash(key)) % 10**8
+    tag = abs(hash((session_key(spark), sf_dir))) % 10**8
     ckpts = []
     u = spark.sql(
         f"SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b "
@@ -1857,8 +1855,7 @@ FROM (SELECT explode(array(a, b)) AS node FROM {uname}) t
 LEFT JOIN {kname} k ON k.node = t.node
 GROUP BY t.node, k.node"""
     )
-    _kcore_cache[key] = (out, ckpts)
-    return out
+    return out, ckpts
 
 
 def _kcore_oracle() -> str:
@@ -1942,10 +1939,6 @@ def _power_iter_tail(op: str) -> str:
     )
 
 
-_xq_cache: dict = {}
-_top_pc_cache: dict = {}
-
-
 def _power_iter_fit(spark: SparkSession, src: str) -> list[tuple[int, int]]:
     """Spark-side power iteration as a DRIVER LOOP with literal
     directions (the Lloyd's-k-means pattern): each of the PI_ITERS
@@ -1985,7 +1978,8 @@ def _xq_view(spark: SparkSession, sf_dir: str) -> str:
     explode at every one of the chain's ~7 references (measured 4.0s
     -> 2.4s at sf0.1 just from checkpointing it)."""
     key = (session_key(spark), sf_dir)
-    if key not in _xq_cache:
+
+    def build():
         from dataforge_core_spark.session import index_width
 
         v = _normed(spark, sf_dir)
@@ -2006,8 +2000,9 @@ def _xq_view(spark: SparkSession, sf_dir: str) -> str:
         ).localCheckpoint(eager=True)
         name = f"xq_{abs(hash(key)) % 10**8}"
         x.createOrReplaceTempView(name)
-        _xq_cache[key] = (name, x)
-    return _xq_cache[key][0]
+        return name, x
+
+    return stored(spark, sf_dir, "xq", build)[0]
 
 
 def _fit_top_pc(spark: SparkSession, sf_dir: str) -> list[tuple[int, int]]:
@@ -2015,12 +2010,10 @@ def _fit_top_pc(spark: SparkSession, sf_dir: str) -> list[tuple[int, int]]:
     fitted 64-int direction — an index artifact exactly like the
     k-means centroids (``_kmeans_assignments``): the fit is charged as
     an index build, queries serve from the fitted vector."""
-    key = (session_key(spark), sf_dir)
-    if key not in _top_pc_cache:
-        _top_pc_cache[key] = _power_iter_fit(
-            spark, _xq_view(spark, sf_dir)
-        )
-    return _top_pc_cache[key]
+    return stored(
+        spark, sf_dir, "top_pc",
+        lambda: _power_iter_fit(spark, _xq_view(spark, sf_dir)),
+    )
 
 
 def _deflate_ctes(op: str, x: str, v1: str, pfx: str = "") -> str:
@@ -2053,13 +2046,6 @@ def _deflate_ctes(op: str, x: str, v1: str, pfx: str = "") -> str:
 )"""
 
 
-_pc2_cache: dict = {}
-# the deflated (x - PC1) matrix checkpoint, kept for the multi-PC fit
-# to continue from (freed by the bench clearer, not eagerly — the
-# deeper fits would otherwise re-pay the first deflate pass)
-_x2_cache: dict = {}
-
-
 def _deflate_projection(fit: list[tuple[int, int]], src: str) -> str:
     """Spark-side deflation as a JOIN-FREE window projection (the abtt
     pattern): the fitted direction is a 64-int literal array, cp is a
@@ -2087,21 +2073,27 @@ def _fit_top_pc2(spark: SparkSession, sf_dir: str) -> list[tuple[int, int]]:
     """Second principal direction by DEFLATION: subtract the fitted
     PC1 component from every vector (one pass over the checkpointed
     quantized matrix, itself checkpointed) and re-run the same
-    quantized power iteration on the residuals.  Cached per
+    quantized power iteration on the residuals.  Stored per
     (session, sf) like the PC1 fit; the deflated matrix stays
-    checkpointed in _x2_cache so _fit_top_pcs continues the deflation
-    without re-paying this pass."""
-    key = (session_key(spark), sf_dir)
-    if key not in _pc2_cache:
+    checkpointed next to the fit (freed by clear_stored, not eagerly)
+    so _fit_top_pcs continues the deflation without re-paying this
+    pass."""
+    return _pc2_stored(spark, sf_dir)[0]
+
+
+def _pc2_stored(spark: SparkSession, sf_dir: str):
+    """(PC2 fit, deflated (x - PC1) matrix view, its checkpoint)."""
+
+    def build():
         x = _xq_view(spark, sf_dir)
         x2 = spark.sql(
             _deflate_projection(_fit_top_pc(spark, sf_dir), x)
         ).localCheckpoint(eager=True)
-        name = f"xq2_{abs(hash(key)) % 10**8}"
+        name = f"xq2_{abs(hash((session_key(spark), sf_dir))) % 10**8}"
         x2.createOrReplaceTempView(name)
-        _x2_cache[key] = (name, x2)
-        _pc2_cache[key] = _power_iter_fit(spark, name)
-    return _pc2_cache[key]
+        return _power_iter_fit(spark, name), name, x2
+
+    return stored(spark, sf_dir, "pc2", build)
 
 
 def embeddings_top_pc2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2211,7 +2203,6 @@ GROUP BY r.vec_id, c1.cp, c2.cp
 
 
 N_PC = 4  # depth of the multi-PC whitening family
-_pcs_cache: dict = {}
 
 
 def _fit_top_pcs(
@@ -2230,15 +2221,16 @@ def _fit_top_pcs(
     from dataforge_core_spark.session import free_local_checkpoint
 
     key = (session_key(spark), sf_dir, n_pc)
-    if key not in _pcs_cache:
+
+    def build():
         fits: list[list[tuple[int, int]]] = [
             _fit_top_pc(spark, sf_dir),
             _fit_top_pc2(spark, sf_dir),
         ][:n_pc]
         # continue from the pc2 fit's deflated matrix (x - PC1), kept
-        # checkpointed in _x2_cache — the first deflate pass is paid
-        # exactly once across the pc2 and multi-PC fits
-        cur, cur_df = _x2_cache[(session_key(spark), sf_dir)]
+        # checkpointed next to the pc2 fit — the first deflate pass is
+        # paid exactly once across the pc2 and multi-PC fits
+        _fit, cur, cur_df = _pc2_stored(spark, sf_dir)
         owned = False
         for k in range(1, n_pc):
             if k >= len(fits):
@@ -2254,8 +2246,9 @@ def _fit_top_pcs(
                 cur, cur_df, owned = name, nxt, True
         if owned:
             free_local_checkpoint(cur_df)
-        _pcs_cache[key] = fits
-    return _pcs_cache[key]
+        return fits
+
+    return stored(spark, sf_dir, "top_pcs", build, n_pc)
 
 
 def _pcs_oracle_base(n_pc: int = N_PC) -> tuple[str, list, list, str]:
@@ -2459,18 +2452,15 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact."""
     from pyspark.sql import functions as F
 
-    from dataforge_core_spark.operators.dedup import (
-        _cc_min_label,
-        _labels_cache,
-    )
+    from dataforge_core_spark.operators.dedup import _cc_min_label
 
-    key = (session_key(spark), sf_dir, "embedding")
-    if key not in _labels_cache:
+    def build():
         pairs = dedup_embedding(spark, sf_dir).selectExpr(
             "vec_a AS doc_a", "vec_b AS doc_b"
         )
-        _labels_cache[key] = _cc_min_label(pairs)[0]
-    labels = _labels_cache[key]
+        return _cc_min_label(pairs)[0]
+
+    labels = stored(spark, sf_dir, "embedding_labels", build)
     vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id")
     return vecs.join(
         labels, vecs.vec_id == labels.doc_id, "left"
@@ -2659,9 +2649,6 @@ def _nprobe_curve_blocks(dialect: str, scored: str) -> str:
 {union}"""
 
 
-_nprobe_scored_cache: dict = {}
-
-
 def ann_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF tuning curve: per-query recall@K at nprobe in
     PROBE_GRID, in one frame — the acceptance artifact for the
@@ -2696,7 +2683,8 @@ def _nprobe_scored_view(spark: SparkSession, sf_dir: str) -> str:
     (one probe-assignment pass + one cid equi-join serve the exact
     baseline and every probe depth / K)."""
     key = (session_key(spark), sf_dir)
-    if key not in _nprobe_scored_cache:
+
+    def build():
         af, _cv = _kmeans_index(spark, sf_dir)
         # literal-projection probe (no cross join, like ann_ivf_search):
         # cellrank = 1 + position in the sorted (dist, cid) struct array
@@ -2715,8 +2703,9 @@ def _nprobe_scored_view(spark: SparkSession, sf_dir: str) -> str:
         ).localCheckpoint(eager=True)
         name = f"nprobe_scored_{abs(hash(key)) % 10**8}"
         sc.createOrReplaceTempView(name)
-        _nprobe_scored_cache[key] = (name, sc)
-    return _nprobe_scored_cache[key][0]
+        return name, sc
+
+    return stored(spark, sf_dir, "nprobe_scored", build)[0]
 
 
 def _nprobe_curve_oracle() -> str:
@@ -2831,9 +2820,6 @@ def _centroid_by_label(src: str, dialect: str) -> str:
     )
 
 
-_centroid_cache: dict = {}
-
-
 def _label_centroids(spark: SparkSession, sf_dir: str) -> str:
     """Cached |labels|-row centroid view (label, emb, cc) — the outlier
     detector's 'index build'.  Like the k-means quantizer, the collected
@@ -2841,7 +2827,8 @@ def _label_centroids(spark: SparkSession, sf_dir: str) -> str:
     _centroid_literal_sql), so re-running the query costs one broadcast
     of constants, not a re-aggregation plus a fresh 64-wide codegen."""
     key = (session_key(spark), sf_dir)
-    if key not in _centroid_cache:
+
+    def build():
         v = _normed(spark, sf_dir)
         rows = spark.sql(
             f"SELECT label AS cid, emb FROM ({_centroid_by_label(v, 'spark')})"
@@ -2850,8 +2837,9 @@ def _label_centroids(spark: SparkSession, sf_dir: str) -> str:
         spark.sql(
             f"SELECT cid AS label, emb, cc FROM ({_centroid_literal_sql(rows)})"
         ).createOrReplaceTempView(name)
-        _centroid_cache[key] = name
-    return _centroid_cache[key]
+        return name
+
+    return stored(spark, sf_dir, "label_centroids", build)
 
 
 def ann_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2973,9 +2961,6 @@ codes AS (
 )"""
 
 
-_pq_codes_cache: dict = {}
-
-
 def _pq_codes_view(spark: SparkSession, sf_dir: str) -> str:
     """Checkpointed raw-PQ code table (vec_id, m, code) — the STORED
     index.  Encode runs once per (session, sf); every ADC consumer
@@ -2984,7 +2969,8 @@ def _pq_codes_view(spark: SparkSession, sf_dir: str) -> str:
     registers already get — a production PQ index never re-encodes at
     query time)."""
     key = (session_key(spark), sf_dir)
-    if key not in _pq_codes_cache:
+
+    def build():
         v = _normed(spark, sf_dir)
         name = f"pq_codes_{abs(hash(key)) % 10**8}"
         df = spark.sql(
@@ -2992,18 +2978,17 @@ def _pq_codes_view(spark: SparkSession, sf_dir: str) -> str:
             " SELECT vec_id, m, code FROM codes"
         ).localCheckpoint(eager=True)
         df.createOrReplaceTempView(name)
-        _pq_codes_cache[key] = (name, df)
-    return _pq_codes_cache[key][0]
+        return name, df
 
-
-_rpq_codes_cache: dict = {}
+    return stored(spark, sf_dir, "pq_codes", build)[0]
 
 
 def _rpq_codes_view(spark: SparkSession, sf_dir: str) -> str:
     """Checkpointed untrained-residual code table — see
     ``_pq_codes_view``."""
     key = (session_key(spark), sf_dir)
-    if key not in _rpq_codes_cache:
+
+    def build():
         af, cv = _kmeans_index(spark, sf_dir)
         name = f"rpq_codes_{abs(hash(key)) % 10**8}"
         df = spark.sql(
@@ -3011,8 +2996,9 @@ def _rpq_codes_view(spark: SparkSession, sf_dir: str) -> str:
             " SELECT vec_id, m, code FROM rcodes"
         ).localCheckpoint(eager=True)
         df.createOrReplaceTempView(name)
-        _rpq_codes_cache[key] = (name, df)
-    return _rpq_codes_cache[key][0]
+        return name, df
+
+    return stored(spark, sf_dir, "rpq_codes", build)[0]
 
 
 def _pq_stored_prelude(src: str, view: str) -> str:
@@ -3700,9 +3686,6 @@ def _tcb_literal_sql(rows) -> str:
     )
 
 
-_trained_cb_cache: dict = {}
-
-
 def _trained_rcb(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     """(rsub view, trained-codebook view, stored-codes view) — the
     trained-PQ index.  rsub is checkpointed (corpus x PQ_M narrow
@@ -3712,10 +3695,9 @@ def _trained_rcb(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     codes, so the query path never re-runs the corpus x codebook
     argmin (measured 2.46 -> ~0.6s on the trained search lane at
     sf0.1)."""
-    key = (session_key(spark), sf_dir)
-    if key not in _trained_cb_cache:
+    def build():
         af, cv = _kmeans_index(spark, sf_dir)
-        tag = abs(hash(key)) % 10**8
+        tag = abs(hash((session_key(spark), sf_dir))) % 10**8
         rsub_name = f"pq_rsub_{tag}"
         rs = spark.sql(_rsub_sql("spark", af, cv)).localCheckpoint(
             eager=True
@@ -3751,11 +3733,10 @@ def _trained_rcb(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
             + ") asg"
         ).localCheckpoint(eager=True)
         cdf.createOrReplaceTempView(codes_name)
-        # rs/cb_df/cdf kept so bench's cold path can free the checkpoints
-        _trained_cb_cache[key] = (
-            rsub_name, cb_name, codes_name, rs, cb_df, cdf
-        )
-    return _trained_cb_cache[key][:3]
+        # rs/cb_df/cdf kept so clear_stored can free the checkpoints
+        return rsub_name, cb_name, codes_name, rs, cb_df, cdf
+
+    return stored(spark, sf_dir, "trained_codebook", build)[:3]
 
 
 def _tcb_chain_sql(dialect: str, af: str, cv: str) -> str:
@@ -4041,16 +4022,14 @@ def _pq_curve_blocks(dialect: str, scored: str) -> str:
 {union}"""
 
 
-_pq_curve_cache: dict = {}
-
-
 def _pq_curve_scored_view(spark: SparkSession, sf_dir: str) -> str:
     """The checkpointed (query x corpus) scored relation of the
     trained-IVFADC curve — one probe-assignment pass, one exact-L2
     pass and one stored-codes ADC pass serve the brute baseline and
     every probe depth."""
     key = (session_key(spark), sf_dir)
-    if key not in _pq_curve_cache:
+
+    def build():
         af, cv = _kmeans_index(spark, sf_dir)
         _rsub, cb, codes = _trained_rcb(spark, sf_dir)
         sa = _probe_sorted_expr(_kmeans_centroids(spark, sf_dir), "emb")
@@ -4070,8 +4049,9 @@ def _pq_curve_scored_view(spark: SparkSession, sf_dir: str) -> str:
         ).localCheckpoint(eager=True)
         name = f"pq_curve_scored_{abs(hash(key)) % 10**8}"
         sc.createOrReplaceTempView(name)
-        _pq_curve_cache[key] = (name, sc)
-    return _pq_curve_cache[key][0]
+        return name, sc
+
+    return stored(spark, sf_dir, "pq_curve_scored", build)[0]
 
 
 def ann_pq_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,7 +24,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dataforge_core_spark.session import session_key
+from dataforge_core_spark.session import session_key, stored
 
 KMV_K = 64
 # the stored bottom-K view keeps enough rows for every consumer: the
@@ -69,9 +69,6 @@ def _toks_cte(dialect: str, docs: str = "documents") -> str:
     )
 
 
-_toks_cache: dict = {}
-
-
 def _toks_view(spark: SparkSession, sf_dir: str) -> str:
     """Temp-view name of the localCheckpoint-ed (source, h) shingle-hash
     relation, built once per (session, sf) and shared by every sketch
@@ -82,8 +79,7 @@ def _toks_view(spark: SparkSession, sf_dir: str) -> str:
     scan of the materialized hashes.  The explicit repartition spreads
     the single-file sf0.1 scan across cores (multi-file corpora are
     already parallel), the same shape as dedup._ex_df."""
-    key = (session_key(spark), sf_dir)
-    if key not in _toks_cache:
+    def build():
         # derive from the dedup pipeline's shared shingle relation
         # instead of re-tokenizing the corpus: dedup._ex_df's (doc_id,
         # 56-bit 3-gram hash) uses the IDENTICAL normalization
@@ -104,13 +100,11 @@ def _toks_view(spark: SparkSession, sf_dir: str) -> str:
             .distinct()
             .localCheckpoint(eager=True)
         )
-        name = f"kmv_toks_{abs(hash(key)) % 10**8}"
+        name = f"kmv_toks_{abs(hash((session_key(spark), sf_dir))) % 10**8}"
         toks.createOrReplaceTempView(name)
-        _toks_cache[key] = (name, toks)
-    return _toks_cache[key][0]
+        return name, toks
 
-
-_bk_cache: dict = {}
+    return stored(spark, sf_dir, "kmv_toks", build)[0]
 
 
 def _bk_view(spark: SparkSession, sf_dir: str) -> str:
@@ -125,8 +119,7 @@ def _bk_view(spark: SparkSession, sf_dir: str) -> str:
     100 TB this is the persisted K-row sketch a warehouse serves
     overlap queries from; only the exact eval baselines still scan the
     universe (r15, guide §2.4)."""
-    key = (session_key(spark), sf_dir)
-    if key not in _bk_cache:
+    def build():
         toks = _toks_view(spark, sf_dir)
         df = (
             spark.sql(
@@ -142,10 +135,11 @@ def _bk_view(spark: SparkSession, sf_dir: str) -> str:
             .coalesce(1)
             .localCheckpoint(eager=True)
         )
-        name = f"kmv_bk_{abs(hash(key)) % 10**8}"
+        name = f"kmv_bk_{abs(hash((session_key(spark), sf_dir))) % 10**8}"
         df.createOrReplaceTempView(name)
-        _bk_cache[key] = (name, df)
-    return _bk_cache[key][0]
+        return name, df
+
+    return stored(spark, sf_dir, "kmv_bottomk", build)[0]
 
 
 def _bk_ctes(
@@ -370,9 +364,6 @@ FROM scoped s JOIN ex e ON e.scope = s.scope
 """
 
 
-_hll_regs_cache: dict = {}
-
-
 def _hll_regs_view(spark: SparkSession, sf_dir: str) -> str:
     """The STORED HLL sketch: checkpointed (source, bucket, r) register
     table, m = 256 rows per source — built once per (session, sf) by
@@ -381,8 +372,7 @@ def _hll_regs_view(spark: SparkSession, sf_dir: str) -> str:
     corpus: at 100 TB this is the persisted sketch a dashboard queries
     while ingest keeps merging into it (the stream lane shows the
     incremental half)."""
-    key = (session_key(spark), sf_dir)
-    if key not in _hll_regs_cache:
+    def build():
         toks = _toks_view(spark, sf_dir)
         rho = _hll_rho_expr("spark")
         df = spark.sql(
@@ -394,10 +384,11 @@ def _hll_regs_view(spark: SparkSession, sf_dir: str) -> str:
             ) rho GROUP BY source, bucket
             """
         ).localCheckpoint(eager=True)
-        name = f"hll_regs_{abs(hash(key)) % 10**8}"
+        name = f"hll_regs_{abs(hash((session_key(spark), sf_dir))) % 10**8}"
         df.createOrReplaceTempView(name)
-        _hll_regs_cache[key] = (name, df)
-    return _hll_regs_cache[key][0]
+        return name, df
+
+    return stored(spark, sf_dir, "hll_regs", build)[0]
 
 
 def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1172,9 +1163,6 @@ FROM probes GROUP BY tok, exact_cnt
 """
 
 
-_cms_cache: dict = {}
-
-
 def _cms_views(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """(matrix view, top-tokens view): the localCheckpoint-ed d x w CMS
     counter matrix and the exact top-CMS_TOP token counts, built once
@@ -1183,12 +1171,11 @@ def _cms_views(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     protocol measured the un-indexed lane at 9.2x for 10x input, pure
     re-scan); the probe then joins two bounded checkpointed relations
     (d*w and CMS_TOP rows)."""
-    key = (session_key(spark), sf_dir)
-    if key not in _cms_cache:
+    def build():
         d, w, top = CMS_D, CMS_W, CMS_TOP
         from dataforge_core_spark.operators.dedup import _token_base
 
-        tag = abs(hash(key)) % 10**8
+        tag = abs(hash((session_key(spark), sf_dir))) % 10**8
         tmp = f"cms_base_{tag}"
         # token occurrences WITH multiplicity off the shared token base
         # (one corpus tokenize pass for the whole index phase)
@@ -1214,8 +1201,9 @@ def _cms_views(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         mname, tname = f"cms_mat_{tag}", f"cms_top_{tag}"
         mat.createOrReplaceTempView(mname)
         topdf.createOrReplaceTempView(tname)
-        _cms_cache[key] = (mname, tname, mat, topdf)
-    return _cms_cache[key][0], _cms_cache[key][1]
+        return mname, tname, mat, topdf
+
+    return stored(spark, sf_dir, "cms", build)[:2]
 
 
 def sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -12,7 +12,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dataforge_core_spark.session import session_key
+from dataforge_core_spark.session import session_key, stored
 
 # tiny per-language stopword lists for the heuristic language ID
 _LANGS: dict[str, list[str]] = {
@@ -455,9 +455,6 @@ PPL_KEEP_PCT = 75  # keep docs at or below the p75 mean-NLL (CCNet-ish)
 # relations an ingest stream joins against.
 # ---------------------------------------------------------------------------
 
-_ppl_model_cache: dict = {}
-
-
 def _ppl_model(spark: SparkSession, sf_dir: str):
     """(model_view, uni_view, ql_v, thr) — the stored LM gate index."""
     from dataforge_core_spark.operators.dedup import (
@@ -466,10 +463,9 @@ def _ppl_model(spark: SparkSession, sf_dir: str):
         _token_base_view,
     )
 
-    key = (session_key(spark), sf_dir)
-    if key not in _ppl_model_cache:
+    def build():
         tb = _token_base_view(spark, sf_dir)
-        tag = abs(hash(key)) % 10**8
+        tag = abs(hash((session_key(spark), sf_dir))) % 10**8
         corp_bg = _tb_bigram_sql(
             tb, f"doc_id % {INCR_MOD} < {INCR_NEW_GE}"
         )
@@ -555,13 +551,9 @@ def _ppl_model(spark: SparkSession, sf_dir: str):
             WHERE cumc >= 1 + ({PPL_KEEP_PCT} * (n - 1)) DIV 100
             """
         ).collect()[0].t
-        _ppl_model_cache[key] = (
-            mname, uname, int(ql_v), int(thr), model, unim, cnt
-        )
-    return _ppl_model_cache[key][:4]
+        return mname, uname, int(ql_v), int(thr), model, unim, cnt
 
-
-_lm_scores_cache: dict = {}
+    return stored(spark, sf_dir, "ppl_model", build)[:4]
 
 
 def _lm_scores(spark: SparkSession, sf_dir: str) -> str:
@@ -585,12 +577,11 @@ def _lm_scores(spark: SparkSession, sf_dir: str) -> str:
 
     from dataforge_core_spark.session import free_local_checkpoint
 
-    key = (session_key(spark), sf_dir)
-    if key not in _lm_scores_cache:
+    def build():
         _view(spark, sf_dir)
         tb = _token_base_view(spark, sf_dir)
         n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-        tag = abs(hash(key)) % 10**8
+        tag = abs(hash((session_key(spark), sf_dir))) % 10**8
         # ONE bigram pass (r16): inlined, _bigram_lm_sql's dbg/cnt/uni
         # CTEs each re-derive the lead-window bigram stream over the
         # token base (Spark inlines CTEs per reference, and the three
@@ -642,8 +633,9 @@ def _lm_scores(spark: SparkSession, sf_dir: str) -> str:
         spark.catalog.dropTempView(cntv)
         name = f"lm_scores_{tag}"
         df.createOrReplaceTempView(name)
-        _lm_scores_cache[key] = (name, df)
-    return _lm_scores_cache[key][0]
+        return name, df
+
+    return stored(spark, sf_dir, "lm_scores", build)[0]
 
 
 def _ppl_filter_sql(
@@ -1095,10 +1087,6 @@ SELECT
 
 BPE_ROUNDS = 3
 
-_bpe_cache: dict = {}
-# (word, n_pieces) after the trained merges — checkpointed per session
-_bpe_wp_cache: dict = {}
-
 
 def _sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
@@ -1107,10 +1095,20 @@ def _sql_str(s: str) -> str:
 def train_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The first BPE_ROUNDS BPE merges over the piece-frequency table:
     (round, sym_a, sym_b, pair_n)."""
+    rows = " UNION ALL ".join(
+        f"SELECT CAST({k} AS INT) AS round, {_sql_str(a)} AS sym_a,"
+        f" {_sql_str(b)} AS sym_b, CAST({n} AS BIGINT) AS pair_n"
+        for k, a, b, n in _bpe(spark, sf_dir)[0]
+    )
+    return spark.sql(rows)
+
+
+def _bpe(spark: SparkSession, sf_dir: str):
+    """(merge table, checkpointed (word, n_pieces) vocabulary after the
+    trained merges): the BPE train loop runs once per (session, sf)."""
     from dataforge_core_spark.session import free_local_checkpoint
 
-    key = (session_key(spark), sf_dir)
-    if key not in _bpe_cache:
+    def build():
         _view(spark, sf_dir)
         wf = spark.sql(
             f"""
@@ -1199,14 +1197,9 @@ def train_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for df in ckpts:  # merge table extracted — no state survives
             free_local_checkpoint(df)
-        _bpe_wp_cache[key] = wp
-        _bpe_cache[key] = merges
-    rows = " UNION ALL ".join(
-        f"SELECT CAST({k} AS INT) AS round, {_sql_str(a)} AS sym_a,"
-        f" {_sql_str(b)} AS sym_b, CAST({n} AS BIGINT) AS pair_n"
-        for k, a, b, n in _bpe_cache[key]
-    )
-    return spark.sql(rows)
+        return merges, wp
+
+    return stored(spark, sf_dir, "bpe", build)
 
 
 def _bpe_cte_parts() -> tuple[list[str], str]:
@@ -1307,9 +1300,7 @@ def _bpe_merges_oracle() -> str:
 
 def train_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc token counts after applying the trained BPE merges."""
-    train_bpe_merges(spark, sf_dir)  # ensures merge + vocab caches
-    key = (session_key(spark), sf_dir)
-    _bpe_wp_cache[key].createOrReplaceTempView("bpe_vocab")
+    _bpe(spark, sf_dir)[1].createOrReplaceTempView("bpe_vocab")
     _view(spark, sf_dir)
     return spark.sql(
         f"""
@@ -1374,9 +1365,7 @@ def train_tokenizer_fertility(
     Served from the same checkpointed (word, n_pieces) vocabulary the
     encode lane uses: one corpus word-extract pass, a broadcast-sized
     vocab join, constant output cardinality (one row per language)."""
-    train_bpe_merges(spark, sf_dir)  # ensures merge + vocab caches
-    key = (session_key(spark), sf_dir)
-    _bpe_wp_cache[key].createOrReplaceTempView("bpe_vocab")
+    _bpe(spark, sf_dir)[1].createOrReplaceTempView("bpe_vocab")
     _view(spark, sf_dir)
     return spark.sql(
         f"""

@@ -1285,9 +1285,6 @@ def _dsir_sql(dialect: str) -> str:
     return f"WITH {fb},\n{_dsir_body(dialect, 'fb')}"
 
 
-_dsir_bkt_cache: dict = {}
-
-
 def _dsir_bucket_view(spark: SparkSession, sf_dir: str) -> str:
     """Checkpointed (doc_id, bkt, is_bench) feature-bucket relation —
     the tokenize + md5 + bigram-zip explode paid ONCE per session
@@ -1298,20 +1295,20 @@ def _dsir_bucket_view(spark: SparkSession, sf_dir: str) -> str:
     slices, resampling at several rates) keeps next to the corpus; a
     strictly one-shot DSIR run would stream the two passes instead —
     that shape remains in the oracle's CTE form (_dsir_sql)."""
-    from dataforge_core_spark.session import session_key
+    from dataforge_core_spark.session import session_key, stored
 
-    key = (session_key(spark), sf_dir)
-    if key not in _dsir_bkt_cache:
+    def build():
         _view(spark, sf_dir)
         df = spark.sql(
             f"""SELECT doc_id, {_dsir_bkt_expr("spark")} AS bkt,
                        doc_id % {BENCH_MOD} = 0 AS is_bench
                 FROM ({_dsir_feats("spark")}) fx"""
         ).localCheckpoint(eager=True)
-        name = f"dsir_bkt_{abs(hash(key)) % 10**8}"
+        name = f"dsir_bkt_{abs(hash((session_key(spark), sf_dir))) % 10**8}"
         df.createOrReplaceTempView(name)
-        _dsir_bkt_cache[key] = (name, df)
-    return _dsir_bkt_cache[key][0]
+        return name, df
+
+    return stored(spark, sf_dir, "dsir_buckets", build)[0]
 
 
 def train_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1556,9 +1553,6 @@ def _ingest_reason_sql(media_policy: str = "flag") -> str:
 _INGEST_REASON_SQL = _ingest_reason_sql()
 
 
-_ingest_base_cache: dict = {}
-
-
 def _ingest_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed five-gate VERDICT relation (doc_id, text_status,
     image_status, audio_status, ppl_keep, contaminated) — the gate
@@ -1569,10 +1563,9 @@ def _ingest_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     persists: policies change far more often than verdicts, so
     re-deriving a decision is a projection, not five index probes."""
     from dataforge_core_spark.operators import streaming_rows as SR
-    from dataforge_core_spark.session import session_key
+    from dataforge_core_spark.session import stored
 
-    key = (session_key(spark), sf_dir)
-    if key not in _ingest_base_cache:
+    def build():
         text = SR.stream_near_dedup(spark, sf_dir, batch=True).selectExpr(
             "doc_id", "status AS text_status"
         )
@@ -1588,14 +1581,15 @@ def _ingest_base(spark: SparkSession, sf_dir: str) -> DataFrame:
         sem = SR.stream_semantic_gate(spark, sf_dir, batch=True).selectExpr(
             "vec_id AS doc_id", "contaminated"
         )
-        _ingest_base_cache[key] = (
+        return (
             text.join(image, "doc_id", "left")
             .join(audio, "doc_id", "left")
             .join(ppl, "doc_id", "left")
             .join(sem, "doc_id", "left")
             .localCheckpoint(eager=True)
         )
-    return _ingest_base_cache[key]
+
+    return stored(spark, sf_dir, "ingest_base", build)
 
 
 def train_ingest_decision(

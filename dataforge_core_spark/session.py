@@ -206,3 +206,68 @@ def free_local_checkpoint(df) -> None:
         plan.rdd().unpersist(False)
     except Exception:
         pass  # best-effort: freeing falls back to the ContextCleaner
+
+
+# The stored-relation registry: every operator index (checkpointed
+# frames, their temp-view names, fitted models) lives here, keyed on
+# (name, application, sf_dir, *params), instead of in one module dict
+# per operator.
+_stored: dict = {}
+_stored_locks: dict = {}
+_stored_guard = _threading.Lock()
+_MISSING = object()
+
+
+def stored(spark: SparkSession, sf_dir: str, name: str, build, *params):
+    """Return the value ``build()`` made for this key, running it at most
+    once per key.
+
+    The first caller builds under a per-key ``RLock``; a concurrent
+    caller of the same key waits on that lock and then reads the stored
+    value (checked before and after taking the lock), so two threads
+    can never both build one relation or race its temp-view names.
+    Builds of DIFFERENT keys run concurrently.  A ``build`` that raises
+    stores nothing, and the next call retries it."""
+    key = (name, session_key(spark), sf_dir, *params)
+    val = _stored.get(key, _MISSING)
+    if val is not _MISSING:
+        return val
+    with _stored_guard:
+        lock = _stored_locks.setdefault(key, _threading.RLock())
+    with lock:
+        val = _stored.get(key, _MISSING)
+        if val is _MISSING:
+            val = build()
+            _stored[key] = val
+        return val
+
+
+def _frames(val):
+    """Every DataFrame inside a stored value (a frame, or a tuple, list
+    or dict holding frames, nested)."""
+    from pyspark.sql import DataFrame
+
+    if isinstance(val, DataFrame):
+        yield val
+    elif isinstance(val, (tuple, list)):
+        for v in val:
+            yield from _frames(v)
+    elif isinstance(val, dict):
+        for v in val.values():
+            yield from _frames(v)
+
+
+def clear_stored(spark: SparkSession) -> None:
+    """Empty the registry: free every stored frame's checkpoint blocks
+    now (not whenever the async ContextCleaner gets to them) and drop
+    every cached relation, so the next build of each key is cold.
+    Call it only while no build runs: a frame a build is still reading
+    would lose its blocks."""
+    with _stored_guard:
+        vals = list(_stored.values())
+        _stored.clear()
+        _stored_locks.clear()
+    for val in vals:
+        for df in _frames(val):
+            free_local_checkpoint(df)
+    spark.catalog.clearCache()

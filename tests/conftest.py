@@ -10,9 +10,10 @@ def pytest_collection_modifyitems(config, items):
     """Fast default profile (r15 verdict item 8: the 584-test suite no
     longer completed inside the round driver's pytest window, leaving
     tests_ok unverifiable).  Tests marked ``slow`` — the 192-pair
-    oracle sweep (the driver's own gate re-runs it at gate scale) and
-    other multi-minute sweeps — are deselected unless
-    SPARK_GRAFT_SLOW_TESTS=1."""
+    oracle sweep and other multi-minute sweeps — are deselected unless
+    SPARK_GRAFT_SLOW_TESTS=1.  The driver's own oracle gate checks only
+    a rotating 50 of the 191 lanes, so the deselected sweep is covered
+    only when it is run with that variable set."""
     if os.environ.get("SPARK_GRAFT_SLOW_TESTS"):
         return
     skip = pytest.mark.skip(

@@ -1,8 +1,9 @@
 """The bench harness is round-critical (the driver records BENCH_r{N}
-from its stdout): a builder thunk that raises, or a cache-clear that
-misses a new cache, silently breaks the round's perf record.  This
-drives every index builder and the cache-clearer end-to-end at sf0.001
-— the same code path bench.main() runs at sf0.1."""
+from its stdout): a builder thunk that raises, or a stored relation
+that survives ``clear_stored``, silently breaks the round's perf
+record.  This drives every index builder and the stored-relation
+registry end-to-end at sf0.001 — the same code path bench.main() runs
+at sf0.1."""
 
 from __future__ import annotations
 
@@ -22,39 +23,19 @@ def _bench(sf_dir: str):
 
 
 def test_index_builders_run_and_caches_clear(spark, sf_dir):
+    from dataforge_core_spark import session
+
     bench = _bench(sf_dir)
     # cold state -> every builder must construct its index from scratch
-    bench._clear_operator_caches(spark)
+    session.clear_stored(spark)
     for name, build in bench._index_builders():
         build(spark)  # raises = the round's bench would die on this row
+    assert session._stored, "the index builders stored nothing"
     # clearing again must free/forget everything the builders created
-    # (a cache the clearer misses keeps serving stale frames after a
-    # round driver re-runs bench in one session)
-    bench._clear_operator_caches(spark)
-    from dataforge_core_spark.operators import (
-        dedup,
-        similarity,
-        simhash,
-        sketches,
-    )
-
-    for cache in (
-        dedup._ex_cache,
-        dedup._pairs_cache,
-        dedup._labels_cache,
-        dedup._substr_cache,
-        dedup._tokbase_cache,
-        simhash._sig_cache,
-        simhash._salted_cache,
-        similarity._knn_cache,
-        similarity._pr_edges_cache,
-        similarity._kcore_cache,
-        similarity._kmeans_cache,
-        similarity._nprobe_scored_cache,
-        similarity._pc2_cache,
-        sketches._toks_cache,
-    ):
-        assert cache == {}, "cache survived _clear_operator_caches"
+    # (an entry that survives keeps serving stale frames after a round
+    # driver re-runs bench in one session)
+    session.clear_stored(spark)
+    assert session._stored == {}
 
 
 def test_host_speed_probe_positive():
@@ -73,23 +54,18 @@ def test_noisy_lanes_are_registered_queries():
     assert not missing, missing
 
 
-def test_every_operator_cache_is_cleared_by_bench():
-    """The cold-path guarantee of bench.py depends on
-    _clear_operator_caches knowing EVERY module-level operator cache —
-    a forgotten one silently serves warm indexes inside 'cold' index
-    timings (continuation-session review finding).  This meta-test
-    enumerates every dict named *_cache in the operator/entry modules
-    and asserts its name appears in the clear function's source, so
-    adding a cache without registering it fails loudly here."""
+def test_operators_define_no_module_level_cache():
+    """Every stored operator relation goes through session.stored, the
+    one registry clear_stored empties.  A module-level ``*_cache`` dict
+    in an operator module (or the entry module) is a second, private
+    store that clear_stored cannot see — it would serve warm indexes
+    inside bench's 'cold' index timings."""
     import importlib
-    import inspect
     import pkgutil
 
-    import bench
+    import __spark_entry__ as entry
     from dataforge_core_spark import operators
 
-    src = inspect.getsource(bench._clear_operator_caches)
-    missing = []
     # enumerate the PACKAGE, not a hardcoded module list — a cache in
     # a brand-new operator module must not escape the guard
     mods = [
@@ -97,19 +73,151 @@ def test_every_operator_cache_is_cleared_by_bench():
         for m in pkgutil.iter_modules(operators.__path__)
     ]
     assert len(mods) >= 11, "operator package enumeration looks broken"
-    for mod in mods:
-        for name, val in vars(mod).items():
-            if name.endswith("_cache") and isinstance(val, dict):
-                if f"{mod.__name__.rsplit('.', 1)[-1]}.{name}" not in src:
-                    missing.append(f"{mod.__name__}.{name}")
-    # the entry module's hub cache is cleared as entry._hub_cache
-    import __spark_entry__ as entry
-
-    if "_hub_cache" not in src or not hasattr(entry, "_hub_cache"):
-        missing.append("__spark_entry__._hub_cache")
-    assert not missing, (
-        "caches unknown to bench._clear_operator_caches: " + ", ".join(missing)
+    found = [
+        f"{mod.__name__}.{name}"
+        for mod in mods + [entry]
+        for name, val in vars(mod).items()
+        if name.endswith("_cache") and isinstance(val, dict)
+    ]
+    assert not found, "module-level caches outside session.stored: " + (
+        ", ".join(found)
     )
+
+
+def test_stored_builds_each_key_once_across_threads():
+    """A second caller of a key whose first build is still running
+    waits on the per-key lock and gets the SAME object: build runs
+    once, so concurrent first calls cannot double-build a relation or
+    race its temp-view names.  Then a stress pass: 16 threads on 4
+    keys with a shortened switch interval, every key built once."""
+    import sys
+    import threading
+    from types import SimpleNamespace
+
+    from dataforge_core_spark import session
+
+    fake = SimpleNamespace(
+        sparkContext=SimpleNamespace(applicationId="stored-unit-test")
+    )
+    started, release = threading.Event(), threading.Event()
+    calls: list[int] = []
+    got: dict[int, object] = {}
+
+    def build():
+        calls.append(1)
+        started.set()
+        assert release.wait(30)
+        return object()
+
+    def call(i):
+        got[i] = session.stored(fake, "sf", "unit", build, 7)
+
+    t1 = threading.Thread(target=call, args=(1,))
+    t2 = threading.Thread(target=call, args=(2,))
+    try:
+        t1.start()
+        assert started.wait(30)
+        t2.start()
+        t2.join(0.3)
+        assert t2.is_alive(), "second caller did not wait for the build"
+        release.set()
+        t1.join(30)
+        t2.join(30)
+        assert not t1.is_alive() and not t2.is_alive()
+        assert len(calls) == 1
+        assert got[1] is got[2]
+        assert session.stored(fake, "sf", "unit", build, 7) is got[1]
+
+        builds: dict[int, int] = {}
+        results: dict[int, set] = {p: set() for p in range(4)}
+        count_lock = threading.Lock()
+
+        def stress_build(p):
+            with count_lock:
+                builds[p] = builds.get(p, 0) + 1
+            return object()
+
+        def stress(i):
+            for p in range(4):
+                v = session.stored(
+                    fake, "sf", "stress", lambda: stress_build(p), p
+                )
+                with count_lock:
+                    results[p].add(id(v))
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            workers = [
+                threading.Thread(target=stress, args=(i,)) for i in range(16)
+            ]
+            for t in workers:
+                t.start()
+            for t in workers:
+                t.join(30)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(t.is_alive() for t in workers)
+        assert builds == {p: 1 for p in range(4)}
+        assert all(len(ids) == 1 for ids in results.values())
+    finally:
+        release.set()
+        for key in [("unit", "stored-unit-test", "sf", 7)] + [
+            ("stress", "stored-unit-test", "sf", p) for p in range(4)
+        ]:
+            session._stored.pop(key, None)
+            session._stored_locks.pop(key, None)
+
+
+def test_lm_scores_concurrent_first_call(spark, sf_dir):
+    """Two threads making the FIRST _lm_scores call of a session share
+    one build, so neither can drop the other's lm_dbg/lm_cnt
+    scaffolding views mid-query."""
+    import threading
+
+    from dataforge_core_spark import session
+    from dataforge_core_spark.operators import text
+
+    session.clear_stored(spark)
+    names: dict[int, str] = {}
+    errors: list[BaseException] = []
+
+    def call(i):
+        try:
+            names[i] = text._lm_scores(spark, sf_dir)
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=call, args=(i,)) for i in (1, 2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert names[1] == names[2]
+    assert spark.table(names[1]).count() > 0
+
+
+def test_clear_stored_frees_normed_checkpoint(spark, sf_dir):
+    """_normed stores its checkpointed frame next to the view name, so
+    clear_stored frees the blocks at once instead of leaving them to
+    the async ContextCleaner through the next timed phase."""
+    from dataforge_core_spark import session
+    from dataforge_core_spark.operators import similarity
+
+    sc = spark.sparkContext
+
+    def rdd_ids():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    session.clear_stored(spark)
+    before = rdd_ids()
+    similarity._normed(spark, sf_dir)
+    mine = rdd_ids() - before
+    assert mine, "_normed produced no checkpoint blocks"
+    session.clear_stored(spark)
+    assert not (mine & rdd_ids()), "_normed checkpoint blocks not freed"
 
 
 def test_index_deps_cover_every_builder():
@@ -175,39 +283,26 @@ def test_concurrent_index_scheduler_respects_deps(monkeypatch):
 
 def test_index_deps_cover_every_cross_builder_cache_touch(spark, sf_dir):
     """Deterministic missing-edge detector for the concurrent index
-    phase (r13 verdict #3: two missing edges — kmv->shingles,
-    ppl_model->token_base — were found racing unguarded
-    check-then-act cache guards only by code review).  Every
-    module-level ``*_cache`` dict is instrumented for reads AND
+    phase.  The edges are a scheduling order (session.stored's per-key
+    locks are what prevent double builds), and a missing edge lets a
+    builder start early and sit blocked on another builder's lock, or
+    build a shared relation itself so its own timing absorbs the other
+    builder's work.  The registry is instrumented for reads AND
     writes, the builders run sequentially with a current-builder tag,
-    and then for every cache key the rule is asserted
-    scheduling-independently: a builder that TOUCHES a key created by
-    another builder must have the creator among its declared
-    transitive _INDEX_DEPS — otherwise the concurrent scheduler is
-    free to run the two at once and the unlocked guard races (double
-    materialization at best, a half-built view at worst).  Also
-    asserts no key is written twice (a rebuild inside one sequential
-    pass = a guard that doesn't guard)."""
-    import importlib
-    import pkgutil
-
-    import __spark_entry__ as entry
-    from dataforge_core_spark import operators
+    and then for every stored key: a builder that TOUCHES a key
+    created by another builder must have the creator among its
+    declared transitive _INDEX_DEPS.  Also asserts no key is written
+    twice (a rebuild inside one sequential pass = a store that doesn't
+    store)."""
+    from dataforge_core_spark import session
 
     bench = _bench(sf_dir)
 
-    mods = [
-        importlib.import_module(f"dataforge_core_spark.operators.{m.name}")
-        for m in pkgutil.iter_modules(operators.__path__)
-    ] + [entry]
-
     current = {"builder": None}
-    touches: dict[tuple, dict] = {}  # (cache, key) -> {creator, touchers}
+    touches: dict[tuple, dict] = {}  # key -> {creators, touchers}
 
-    def _log(cname, key, write):
-        rec = touches.setdefault(
-            (cname, key), {"creators": [], "touchers": set()}
-        )
+    def _log(key, write):
+        rec = touches.setdefault(key, {"creators": [], "touchers": set()})
         b = current["builder"]
         if b is None:
             return
@@ -215,45 +310,24 @@ def test_index_deps_cover_every_cross_builder_cache_touch(spark, sf_dir):
         if write:
             rec["creators"].append(b)
 
-    def _mk(cname):
-        class _Audited(dict):
-            def __contains__(self, key):
-                _log(cname, key, False)
-                return dict.__contains__(self, key)
+    class _Audited(dict):
+        def get(self, key, default=None):
+            _log(key, False)
+            return dict.get(self, key, default)
 
-            def __getitem__(self, key):
-                _log(cname, key, False)
-                return dict.__getitem__(self, key)
+        def __setitem__(self, key, value):
+            _log(key, not dict.__contains__(self, key))
+            dict.__setitem__(self, key, value)
 
-            def get(self, key, default=None):
-                _log(cname, key, False)
-                return dict.get(self, key, default)
-
-            def __setitem__(self, key, value):
-                _log(cname, key, not dict.__contains__(self, key))
-                dict.__setitem__(self, key, value)
-
-            def setdefault(self, key, default=None):
-                _log(cname, key, not dict.__contains__(self, key))
-                return dict.setdefault(self, key, default)
-
-        return _Audited()
-
-    originals: list[tuple] = []
-    bench._clear_operator_caches(spark)
+    original = session._stored
+    session.clear_stored(spark)
+    session._stored = _Audited()
     try:
-        for mod in mods:
-            for name, val in list(vars(mod).items()):
-                if name.endswith("_cache") and isinstance(val, dict):
-                    cname = f"{mod.__name__.rsplit('.', 1)[-1]}.{name}"
-                    originals.append((mod, name, val))
-                    setattr(mod, name, _mk(cname))
-        assert len(originals) >= 20, "cache enumeration looks broken"
-
         for name, build in bench._index_builders():
             current["builder"] = name
             build(spark)
         current["builder"] = None
+        assert len(touches) >= 20, "registry instrumentation looks broken"
 
         closure: dict[str, set] = {}
 
@@ -268,11 +342,11 @@ def test_index_deps_cover_every_cross_builder_cache_touch(spark, sf_dir):
             return closure[n]
 
         problems = []
-        for (cname, key), rec in touches.items():
+        for key, rec in touches.items():
             if len(rec["creators"]) > 1:
                 problems.append(
-                    f"{cname}{key!r} written {len(rec['creators'])}x "
-                    f"by {rec['creators']} (guard doesn't guard)"
+                    f"{key!r} written {len(rec['creators'])}x "
+                    f"by {rec['creators']} (store doesn't store)"
                 )
             if not rec["creators"]:
                 continue  # pre-seeded or never built in this phase
@@ -281,13 +355,12 @@ def test_index_deps_cover_every_cross_builder_cache_touch(spark, sf_dir):
                 if creator not in _deps(b):
                     problems.append(
                         f"missing _INDEX_DEPS edge {creator} -> {b} "
-                        f"(shared cache entry {cname}{key!r})"
+                        f"(shared stored entry {key!r})"
                     )
         assert not problems, "\n".join(sorted(set(problems)))
     finally:
-        for mod, name, val in originals:
-            setattr(mod, name, val)
-        bench._clear_operator_caches(spark)
+        session.clear_stored(spark)
+        session._stored = original
 
 
 def test_stamp_salvage_tool():

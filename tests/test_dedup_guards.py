@@ -143,6 +143,7 @@ def test_simhash_hot_block_bucket_salted(spark, tmp_path):
     of corpus size, so a hot block must not go quadratic.  Same-residue
     pairs survive (partial recall), normal buckets are untouched, and
     the DuckDB oracle applies the identical rule."""
+    from dataforge_core_spark import session
     from dataforge_core_spark.operators import simhash
 
     # 10 identical docs -> identical signatures -> all 4 blocks form one
@@ -189,7 +190,7 @@ def test_simhash_hot_block_bucket_salted(spark, tmp_path):
     assert got == want
 
     # with the cap above the hot bucket's size, all 45 pairs come back
-    simhash._sig_cache.clear()
+    session.clear_stored(spark)
     unguarded = {
         (r.doc_a, r.doc_b)
         for r in simhash.dedup_simhash_pairs(

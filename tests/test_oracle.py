@@ -160,8 +160,9 @@ def _norm_arrow_type(t) -> str:
 
 
 @pytest.mark.slow  # 192-pair sweep, multi-minute: deselected from the
-# default profile (the round driver's own oracle gate re-runs every
-# pair at gate scale; run locally with SPARK_GRAFT_SLOW_TESTS=1)
+# default profile.  The round driver's oracle gate checks only a
+# rotating 50 of the 191 lanes at gate scale, so run the full sweep
+# locally with SPARK_GRAFT_SLOW_TESTS=1
 @pytest.mark.parametrize("name", NAMES)
 def test_query_matches_oracle(name, spark, sf_dir):
     q = _Q[name]

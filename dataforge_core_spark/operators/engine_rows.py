@@ -119,7 +119,7 @@ def engine_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     project = Project(sources=[src], relations=rels)
-    hub = ProjectRunner(spark, project, persist_hubs=False).build()["orders_sj"]
+    hub = ProjectRunner(spark, project).build()["orders_sj"]
     return canonicalize(hub)
 
 
@@ -156,9 +156,7 @@ def engine_recalc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataforge_core_spark.runner import ProjectRunner
 
     project, orders = _orders_only_project()
-    runner = ProjectRunner(
-        spark, project, {"DATA_DIR": sf_dir}, persist_hubs=False
-    )
+    runner = ProjectRunner(spark, project, {"DATA_DIR": sf_dir})
     hubs = runner.build()
     stale = hubs["tpch_orders"].withColumn("cust_order_rank", F.lit(-1))
     recalced = runner.compiler.recalculate(orders, stale, hubs)
@@ -294,7 +292,7 @@ def engine_subsource(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
     )
     project = Project(sources=[parent, sub])
-    hub = ProjectRunner(spark, project, persist_hubs=False).build()["orders_n"]
+    hub = ProjectRunner(spark, project).build()["orders_n"]
     flat = hub.select(
         "o_orderkey", F.explode("order_items").alias("x")
     ).select(
@@ -436,9 +434,7 @@ def engine_subsource_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
     )
     project = Project(sources=[parent, sub, subsub])
-    hub = ProjectRunner(spark, project, persist_hubs=False).build()[
-        "orders_chain"
-    ]
+    hub = ProjectRunner(spark, project).build()["orders_chain"]
     return (
         hub.select("o_orderkey", F.explode("chain_items").alias("it"))
         .select(
@@ -601,9 +597,7 @@ def engine_subsource_siblings(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
     )
     project = Project(sources=[parent, items, fees])
-    hub = ProjectRunner(spark, project, persist_hubs=False).build()[
-        "orders_sib"
-    ]
+    hub = ProjectRunner(spark, project).build()["orders_sib"]
     return hub.select(
         "o_orderkey", F.explode("sib_fees").alias("f")
     ).select(
@@ -722,7 +716,7 @@ def engine_struct_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
     )
     project = Project(sources=[src], outputs=[out])
-    runner = ProjectRunner(spark, project, persist_hubs=False)
+    runner = ProjectRunner(spark, project)
     return runner.build_outputs()["media_dims"]
 
 
@@ -796,7 +790,7 @@ def engine_output_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     base = tempfile.mkdtemp(prefix="dfspark_sinks_")
-    ProjectRunner(spark, project, persist_hubs=False).materialize(base)
+    ProjectRunner(spark, project).materialize(base)
 
     # S3: the materialized hub parquet itself, re-read from its sink
     df_h = spark.read.parquet(os.path.join(base, "hub_docs_os")).select(
@@ -958,7 +952,7 @@ def _agg_family_row(
         ]
     )
     project = Project(sources=[customer, orders], relations=rels)
-    hub = ProjectRunner(spark, project, persist_hubs=False).build()[csrc]
+    hub = ProjectRunner(spark, project).build()[csrc]
     return canonicalize(hub)
 
 
@@ -1079,9 +1073,7 @@ def engine_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataforge_core_spark.sources.readers import read_source
 
     project, orders = _orders_only_project()
-    runner = ProjectRunner(
-        spark, project, {"DATA_DIR": sf_dir}, persist_hubs=False
-    )
+    runner = ProjectRunner(spark, project, {"DATA_DIR": sf_dir})
     raw = read_source(spark, orders, {"DATA_DIR": sf_dir})
     base_raw = raw.filter("o_orderdate < DATE'1997-01-01'")
     inc_raw = raw.filter("o_orderdate >= DATE'1997-01-01'")
@@ -1111,9 +1103,7 @@ def engine_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataforge_core_spark.sources.readers import read_source
 
     project, orders = _orders_only_project()
-    runner = ProjectRunner(
-        spark, project, {"DATA_DIR": sf_dir}, persist_hubs=False
-    )
+    runner = ProjectRunner(spark, project, {"DATA_DIR": sf_dir})
     raw = read_source(spark, orders, {"DATA_DIR": sf_dir})
     mutated = (
         raw.filter(_UPSERT_PRED)
@@ -1213,9 +1203,7 @@ def _set_ops_project(sf_dir: str):
 def engine_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataforge_core_spark.runner import ProjectRunner
 
-    runner = ProjectRunner(
-        spark, _set_ops_project(sf_dir), persist_hubs=False
-    )
+    runner = ProjectRunner(spark, _set_ops_project(sf_dir))
     return runner.build_outputs()["cust_set_ops"]
 
 
@@ -1349,7 +1337,7 @@ def engine_import_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # compile straight from the imported state (the --from-state flow)
     rebuilt = MetaStore(store.state_dir).to_project()
-    hub = ProjectRunner(spark, rebuilt, persist_hubs=False).build()["docs_im"]
+    hub = ProjectRunner(spark, rebuilt).build()["docs_im"]
     return canonicalize(hub)
 
 

@@ -3397,6 +3397,10 @@ def _ivf_pq_residual_body(
     )
     hint_q = "/*+ BROADCAST(q) */ " if dialect == "spark" else ""
     hint_l = "/*+ BROADCAST(ca, l) */ " if dialect == "spark" else ""
+    # the PQ_K-row codebook stays the broadcast side of the LUT cross
+    # join: without the hint, AQE re-plans it as a CartesianProduct once
+    # the centroid stage reports its runtime size
+    hint_cb = "/*+ BROADCAST(mm, rcb) */ " if dialect == "spark" else ""
     int_t = "INT" if dialect == "spark" else "INTEGER"
     codes_part = (
         _res_codes_ctes(dialect, af, cv, pq_m)
@@ -3413,7 +3417,7 @@ qs AS (
             nprobe, probe_sql)},
 mm AS (SELECT {enum} AS m),
 lut AS (
-  SELECT q.query_id, p.cid, mm.m, rcb.code, ({qrdist}) AS d
+  SELECT {hint_cb}q.query_id, p.cid, mm.m, rcb.code, ({qrdist}) AS d
   FROM qs q JOIN qp p ON q.query_id = p.query_id
   JOIN {cv} c ON p.cid = c.cid
   CROSS JOIN mm CROSS JOIN rcb

@@ -36,18 +36,11 @@ class ProjectRunner:
         spark: SparkSession,
         project: Project,
         substitutions: dict[str, str] | None = None,
-        persist_hubs: bool = True,
     ):
         self.spark = spark
         self.project = project
         self.substitutions = substitutions or {}
         self.compiler = SourceCompiler(spark, project)
-        # Hubs are reusable assets in the reference (always materialized
-        # tables).  In lazy build mode, downstream hubs re-expand every
-        # referenced hub's plan per reference — persisting each hub keeps
-        # one copy per hub (Catalyst does not dedup identical subtrees).
-        # materialize() is the full parquet-checkpoint equivalent.
-        self.persist_hubs = persist_hubs
 
     # ------------------------------------------------------------------
     def topo_order(self) -> list[list[str]]:
@@ -92,8 +85,7 @@ class ProjectRunner:
             for name in level:
                 src = by_name[name]
                 base = read_source(self.spark, src, self.substitutions)
-                df = self.compiler.compile_source(src, base, hubs)
-                hubs[name] = df.persist() if self.persist_hubs else df
+                hubs[name] = self.compiler.compile_source(src, base, hubs)
         return hubs
 
     def build_checkpointed(self) -> dict[str, DataFrame]:

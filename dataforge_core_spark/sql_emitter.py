@@ -27,6 +27,7 @@ import re
 
 from pyspark.sql import SparkSession
 
+from dataforge_core_spark.backends import STMT_SPLIT
 from dataforge_core_spark.model import (
     HIVE_TO_SPARK_DDL,
     Output,
@@ -65,17 +66,15 @@ class SqlEmitter:
         the emitter's analogue of the reference's build-time local-Spark
         type probes (importProject.py:81-111).  Empty without a session
         (decimal normalization is then skipped in the artifact).  Only
-        the schemas are read, so the hubs are not persisted: a persisted
-        plan stays in the CacheManager every ``newSession()`` shares and
-        would serve stale rows to a later build of the same sources."""
+        the schemas are read; ``build()`` never persists, so no plan is
+        left in the CacheManager every ``newSession()`` shares to serve
+        stale rows to a later build of the same sources."""
         if self.spark is None:
             return {}
         if self._dtypes is None:
             from dataforge_core_spark.runner import ProjectRunner
 
-            hubs = ProjectRunner(
-                self.spark, self.project, self.subs, persist_hubs=False
-            ).build()
+            hubs = ProjectRunner(self.spark, self.project, self.subs).build()
             self._dtypes = {n: dict(df.dtypes) for n, df in hubs.items()}
         return self._dtypes.get(source_name, {})
 
@@ -453,14 +452,12 @@ class SqlEmitter:
 
 # -- helpers ---------------------------------------------------------------
 
-_STMT_SPLIT = re.compile(r";(?=(?:[^']*'[^']*')*[^']*$)")
-
-
 def run_statements(spark: SparkSession, sql_text: str) -> int:
-    """Split on ';' outside quotes and execute sequentially
-    (databricks_sql.py:47-60).  Returns the statement count."""
+    """Split on ';' outside quotes (``backends.STMT_SPLIT``) and execute
+    sequentially (databricks_sql.py:47-60).  Returns the statement
+    count."""
     n = 0
-    for stmt in _STMT_SPLIT.split(sql_text):
+    for stmt in STMT_SPLIT.findall(sql_text):
         if stmt.strip():
             spark.sql(stmt)
             n += 1

@@ -6,24 +6,6 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def pytest_collection_modifyitems(config, items):
-    """Fast default profile (r15 verdict item 8: the 584-test suite no
-    longer completed inside the round driver's pytest window, leaving
-    tests_ok unverifiable).  Tests marked ``slow`` — the 192-pair
-    oracle sweep and other multi-minute sweeps — are deselected unless
-    SPARK_GRAFT_SLOW_TESTS=1.  The driver's own oracle gate checks only
-    a rotating 50 of the 191 lanes, so the deselected sweep is covered
-    only when it is run with that variable set."""
-    if os.environ.get("SPARK_GRAFT_SLOW_TESTS"):
-        return
-    skip = pytest.mark.skip(
-        reason="slow sweep; set SPARK_GRAFT_SLOW_TESTS=1 to run"
-    )
-    for item in items:
-        if "slow" in item.keywords:
-            item.add_marker(skip)
-
-
 @pytest.fixture(scope="session")
 def spark():
     from dataforge_core_spark.session import get_spark

@@ -46,7 +46,7 @@ def test_theta_aggregate(spark, sf_dir):
         ]
     )
     project = Project(sources=[cust, ord_src], relations=rels)
-    hubs = ProjectRunner(spark, project, persist_hubs=False).build()
+    hubs = ProjectRunner(spark, project).build()
     got = {
         r["c_custkey"]: (r["big_order_count"], r["big_order_total"])
         for r in hubs["cust"].collect()

@@ -55,7 +55,7 @@ def test_virtual_and_file_outputs(spark, sf_dir, tmp_path):
     project.outputs[2].channels[0].mappings = (
         project.outputs[2].channels[0].mappings[:1]
     )
-    runner = ProjectRunner(spark, project, persist_hubs=False)
+    runner = ProjectRunner(spark, project)
     runner.materialize(str(tmp_path))
     n = spark.table("v_nations").count()
     assert n > 0
@@ -71,7 +71,7 @@ def test_text_output_multi_column_rejected(spark, sf_dir, tmp_path):
 
     project, out = _mini_project(sf_dir)
     project.outputs = [out("bad_text", "file", "text")]
-    runner = ProjectRunner(spark, project, persist_hubs=False)
+    runner = ProjectRunner(spark, project)
     with pytest.raises(ProjectError, match="exactly one column"):
         runner.materialize(str(tmp_path))
 
@@ -96,7 +96,7 @@ def test_aggregate_mapping_requires_aggregate_op(spark, sf_dir):
             }
         )
     ]
-    runner = ProjectRunner(spark, project, persist_hubs=False)
+    runner = ProjectRunner(spark, project)
     with pytest.raises(ProjectError, match="operation_type"):
         runner.build_outputs()
 
@@ -202,7 +202,7 @@ def test_partition_ordinal_honored(spark, sf_dir, tmp_path):
     )
     assert po.partition_columns() == ["key"]
     project.outputs = [po]
-    runner = ProjectRunner(spark, project, persist_hubs=False)
+    runner = ProjectRunner(spark, project)
     runner.materialize(str(tmp_path))
     # hive-style directory partitions on disk
     subdirs = {d for d in os.listdir(tmp_path / "p_nations") if "=" in d}
@@ -243,7 +243,7 @@ def test_csv_and_json_file_outputs(spark, sf_dir, tmp_path):
         out("c_nations", "file", "csv"),
         out("j_nations", "file", "json"),
     ]
-    runner = ProjectRunner(spark, project, persist_hubs=False)
+    runner = ProjectRunner(spark, project)
     runner.materialize(str(tmp_path))
     csv = spark.read.option("header", "true").csv(str(tmp_path / "c_nations"))
     js = spark.read.json(str(tmp_path / "j_nations"))
@@ -296,7 +296,7 @@ def test_zorder_ordinal_clusters_files(spark, sf_dir, tmp_path):
     assert po.zorder_columns() == ["price"]
     project = Project(sources=[src])
     project.outputs = [po]
-    runner = ProjectRunner(spark, project, persist_hubs=False)
+    runner = ProjectRunner(spark, project)
     runner.materialize(str(tmp_path))
 
     files = glob.glob(str(tmp_path / "z_orders" / "part-*.parquet"))

@@ -127,7 +127,7 @@ def test_rule_pipeline_stays_in_codegen(project, spark, sf_dir):
     """Derived-column rules compile to F.expr over built-ins — the hub
     projection must sit inside WholeStageCodegen spans (no Python/UDF
     eval nodes in the pipeline)."""
-    r = ProjectRunner(spark, project, {"DATA_DIR": sf_dir}, persist_hubs=False)
+    r = ProjectRunner(spark, project, {"DATA_DIR": sf_dir})
     hubs = r.build()
     df = hubs["tpch_supplier"]
     # AQE only reveals codegen spans in the finalized plan — execute the
@@ -150,7 +150,7 @@ def test_aggregate_rewrite_is_partial_final(project, spark, sf_dir):
     """Decorrelated aggregate lookups (J5) must compile to hash
     aggregates with a partial stage (map-side combine) — not a bare
     shuffle of raw rows."""
-    r = ProjectRunner(spark, project, {"DATA_DIR": sf_dir}, persist_hubs=False)
+    r = ProjectRunner(spark, project, {"DATA_DIR": sf_dir})
     hubs = r.build()
     plan = _plan(hubs["tpch_customer"])
     assert "HashAggregate" in plan
@@ -212,81 +212,6 @@ def test_ranked_ann_windows_group_limit(spark):
         assert plan.count("WindowGroupLimit") >= 1, (
             f"{name}: ranking window has no WindowGroupLimit"
         )
-
-
-# queries whose plans are cheap to derive (no eager driver-side loops /
-# streaming execution at construction time); ann_bruteforce is the one
-# intentional all-pairs shapes: ann_bruteforce's re-rank stage scans the
-# corpus against a broadcast query set (BroadcastNestedLoopJoin on
-# q.vec_id <> c.vec_id); ann_ivf_probe2's probe assignment cross-joins
-# the query set against the K=8-row checkpointed centroid table (always
-# broadcast, K rows) before the cid-keyed equi-join search
-# ann_recall_eval embeds ann_bruteforce as its exact side, so it carries
-# the same intentional BNLJ
-_CARTESIAN_EXEMPT = {
-    "ann_bruteforce",
-    # intentional: same broadcast-query all-pairs shape as
-    # ann_bruteforce, over the 4x-smaller stored SQ8 code table
-    # (the recall eval embeds both the SQ and the exact side)
-    "ann_sq_search",
-    "ann_sq_recall",
-    # NOTE (r10): the IVF probe family (ann_ivf_probe2/probe3_k5,
-    # ann_filtered_search, ann_nprobe_recall_curve, and the
-    # semantic-decontamination screen) moved OFF this list — their
-    # probe assignment is now a literal projection over the K
-    # driver-side centroids (_probe_sorted_expr), not a broadcast
-    # cross join, so they plan with zero BroadcastNestedLoopJoins.
-    "ann_recall_eval",
-    # intentional: PQ codebook is a PQ_K-row broadcast relation, and the
-    # ADC LUT build is a (queries x subspaces x codewords) cross join of
-    # three tiny broadcast relations (N_QUERIES*PQ_M*PQ_K = 1024 rows)
-    "ann_pq_encode",
-    "ann_pq_search",
-    "ann_pq_recall",
-    "ann_ivf_pq",
-    # intentional: same PQ shapes in residual space — the encode side
-    # cross-joins the corpus against the PQ_K-row residual codebook,
-    # the LUT against two tiny broadcast relations; the centroid join
-    # is an 8-row broadcast equi-join on cid
-    "ann_ivf_pq_residual",
-    # intentional: the trained-codebook lane carries the same
-    # tiny-broadcast LUT cross join in residual space
-    "ann_ivf_pq_trained",
-    # intentional: embeds ALL THREE ADC variants above, so it carries
-    # their tiny-broadcast LUT/codebook cross joins
-    "ann_pq_residual_recall",
-    # intentional: the exact-baseline side of the Matryoshka recall
-    # eval is the same all-pairs shape as ann_bruteforce
-    "ann_mrl_recall",
-    # intentional: the two-stage MRL eval's prefix scan + exact
-    # baseline are the same all-pairs eval shape
-    "ann_mrl_rerank",
-    # intentional: MRR ranks the same broadcast-query all-pairs scan
-    "ann_mrr",
-    # intentional: each PQ_M_GRID block encodes the corpus against the
-    # PQ_K=16-row broadcast codebook — the same tiny-broadcast encode
-    # cross join as ann_pq_encode, repeated once per grid point
-    "ann_pq_m_curve",
-}
-
-
-def test_no_cartesian_products_in_driver_queries(spark):
-    """No driver query may plan a CartesianProduct, and only the
-    explicitly exempted all-pairs shapes may BroadcastNestedLoopJoin —
-    an accidental non-equi join is a silent 100x at scale."""
-    import __spark_entry__ as e
-
-    sf = "/root/testdata/sf0.001"
-    skip_prefixes = ("stream_", "engine_", "dedup_cluster")
-    for name, fn in e.queries().items():
-        if name.startswith(skip_prefixes):
-            continue  # eager side-effects at construction; covered elsewhere
-        plan = fn(spark, sf)._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
-        if name not in _CARTESIAN_EXEMPT:
-            assert "BroadcastNestedLoopJoin" not in plan, (
-                f"{name}: unexpected nested-loop join"
-            )
 
 
 def test_semantic_decontaminate_is_probed_not_brute(spark):

@@ -299,7 +299,7 @@ def test_random_project_sql_matches_dataframe(spark, sf_dir, spec):
     try:
         run_sql = SqlEmitter(project, {}, spark=spark).emit_all(target)
         run_statements(spark, run_sql)
-        runner = ProjectRunner(spark, project, persist_hubs=False)
+        runner = ProjectRunner(spark, project)
         hubs = runner.build()
         for s in project.sources:
             sql_df = spark.table(s.target_table)
@@ -522,9 +522,7 @@ def test_random_chain_sql_matches_dataframe(spark, rnd_chain_parquet, spec):
     try:
         run_sql = SqlEmitter(project, {}, spark=spark).emit_all(target)
         run_statements(spark, run_sql)
-        df = ProjectRunner(spark, project, persist_hubs=False).build()[
-            "orders_rnd"
-        ]
+        df = ProjectRunner(spark, project).build()["orders_rnd"]
         sql_df = spark.table(tbl)
         assert sorted(sql_df.columns) == sorted(df.columns)
         assert _rows(sql_df) == _rows(df)
@@ -710,9 +708,7 @@ def test_random_sibling_sql_matches_dataframe(
     try:
         run_sql = SqlEmitter(project, {}, spark=spark).emit_all(target)
         run_statements(spark, run_sql)
-        df = ProjectRunner(spark, project, persist_hubs=False).build()[
-            "orders_rs"
-        ]
+        df = ProjectRunner(spark, project).build()["orders_rs"]
         sql_df = spark.table(tbl)
         assert sorted(sql_df.columns) == sorted(df.columns)
         assert _rows(sql_df) == _rows(df)

@@ -283,9 +283,7 @@ def test_incremental_append_equals_full_rebuild_windowed(spark, sf_dir):
     )
 
     project, orders = _orders_only_project()
-    runner = ProjectRunner(
-        spark, project, {"DATA_DIR": sf_dir}, persist_hubs=False
-    )
+    runner = ProjectRunner(spark, project, {"DATA_DIR": sf_dir})
     raw = read_source(spark, orders, {"DATA_DIR": sf_dir})
     # split mid-stream so appended orders land BEFORE existing ones in
     # the rank order for many customers

@@ -47,7 +47,7 @@ def test_self_relation_lookup(spark, sf_dir):
         ]
     )
     project = Project(sources=[src], relations=rels)
-    hubs = ProjectRunner(spark, project, persist_hubs=False).build()
+    hubs = ProjectRunner(spark, project).build()
     got = {
         r["o_orderkey"]: r["prev_price"]
         for r in hubs["orders_sj"].collect()

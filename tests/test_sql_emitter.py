@@ -122,7 +122,7 @@ def test_emitter_type_inference_leaves_no_stale_cache(spark, sf_dir, tmp_path):
     SqlEmitter(project, subs, spark=spark).emit_all(str(tmp_path / "target"))
 
     def region_rows() -> int:
-        runner = ProjectRunner(spark, project, subs, persist_hubs=False)
+        runner = ProjectRunner(spark, project, subs)
         return runner.build()["tpch_region"].count()
 
     region = data / "region.parquet"
@@ -130,3 +130,25 @@ def test_emitter_type_inference_leaves_no_stale_cache(spark, sf_dir, tmp_path):
     assert region_rows() == table.num_rows
     pq.write_table(table.slice(0, table.num_rows - 1), region)
     assert region_rows() == table.num_rows - 1
+
+
+def test_run_statements_splits_outside_quotes(spark):
+    """A ';' inside a quoted literal does not end a statement, and a
+    blank trailing statement is neither run nor counted."""
+    from dataforge_core_spark.sql_emitter import run_statements
+
+    script = (
+        "DROP TABLE IF EXISTS split_a;\n"
+        "CREATE TABLE split_a USING parquet AS SELECT 'x;y' AS s;\n"
+        "DROP TABLE IF EXISTS split_b;\n"
+        "CREATE TABLE split_b USING parquet AS\n"
+        "  SELECT s, ';' AS t FROM split_a;\n"
+        "  \n"
+    )
+    try:
+        assert run_statements(spark, script) == 4
+        row = spark.table("split_b").collect()
+        assert [tuple(r) for r in row] == [("x;y", ";")]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS split_a")
+        spark.sql("DROP TABLE IF EXISTS split_b")

@@ -238,8 +238,7 @@ def test_stream_static_lookup(spark, sf_dir):
     )
     project = Project(sources=[cust, ev], relations=rels)
     static_hubs = {
-        "cust_dim": ProjectRunner(spark, project, persist_hubs=False)
-        .build()["cust_dim"]
+        "cust_dim": ProjectRunner(spark, project).build()["cust_dim"]
     }
     stream = stream_events(spark, sf_dir)
     enriched = compile_stream_source(spark, project, ev, stream, static_hubs)

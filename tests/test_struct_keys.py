@@ -80,7 +80,7 @@ def test_struct_rule_and_mapping(spark, struct_parquet):
     from dataforge_core_spark.runner import ProjectRunner
 
     project = _project(struct_parquet)
-    runner = ProjectRunner(spark, project, persist_hubs=False)
+    runner = ProjectRunner(spark, project)
     hubs = runner.build()
     outs = runner.build_outputs(hubs)
     hub = hubs["media"]
@@ -104,6 +104,6 @@ def test_unpivot_rejected(spark, struct_parquet):
 
     project = _project(struct_parquet)
     project.outputs[0].channels[0].unpivot = ["w", "h"]
-    runner = ProjectRunner(spark, project, persist_hubs=False)
+    runner = ProjectRunner(spark, project)
     with pytest.raises(ProjectError, match="Unpivot not supported yet!"):
         runner.build_outputs()

@@ -89,7 +89,7 @@ def test_sub_source_enrichment(spark, nested_parquet):
     from dataforge_core_spark.runner import ProjectRunner
 
     project = _project(nested_parquet)
-    runner = ProjectRunner(spark, project, persist_hubs=False)
+    runner = ProjectRunner(spark, project)
     assert runner.topo_order() == [["orders_n"]]  # sub not a hub
     hubs = runner.build()
     hub = hubs["orders_n"]
@@ -140,7 +140,7 @@ def test_sub_source_sql_artifact(spark, nested_parquet, tmp_path):
     run_sql = emitter.emit_all(str(tmp_path))
     run_statements(spark, run_sql)
     sql_df = spark.table("hub_orders_n")
-    df = ProjectRunner(spark, project, persist_hubs=False).build()["orders_n"]
+    df = ProjectRunner(spark, project).build()["orders_n"]
     cols = sorted(df.columns)
     norm = lambda d: sorted(  # noqa: E731
         tuple(repr(r[c]) for c in cols) for r in d.collect()
@@ -253,9 +253,7 @@ def test_sub_source_chain(spark, chain_parquet):
     from dataforge_core_spark.runner import ProjectRunner
 
     project = _chain_project(chain_parquet)
-    hub = ProjectRunner(spark, project, persist_hubs=False).build()[
-        "orders_c"
-    ]
+    hub = ProjectRunner(spark, project).build()["orders_c"]
     el = hub.schema["c_items"].dataType.elementType
     assert [f.name for f in el.fields] == [
         "l_linenumber", "l_quantity", "charges", "qty_x2", "c_charges",
@@ -311,9 +309,7 @@ def test_sub_source_chain_sql_artifact(spark, chain_parquet, tmp_path):
     run_sql = emitter.emit_all(str(tmp_path))
     run_statements(spark, run_sql)
     sql_df = spark.table("hub_orders_c")
-    df = ProjectRunner(spark, project, persist_hubs=False).build()[
-        "orders_c"
-    ]
+    df = ProjectRunner(spark, project).build()["orders_c"]
     cols = sorted(df.columns)
     norm = lambda d: sorted(  # noqa: E731
         tuple(repr(r[c]) for c in cols) for r in d.collect()
@@ -369,9 +365,7 @@ def test_sub_source_ancestor_refs(spark, chain_parquet):
             }
         ).rules[0]
     )
-    hub = ProjectRunner(spark, project, persist_hubs=False).build()[
-        "orders_c"
-    ]
+    hub = ProjectRunner(spark, project).build()["orders_c"]
     flat = (
         hub.select("o_orderkey", F.explode("c_items").alias("it"))
         .select(
@@ -427,9 +421,7 @@ def test_sub_source_ancestor_ref_binds_to_named_ancestor(
     by_name["c_charges"].rules.append(
         mk("from_item", "[c_items].l_quantity + 0")
     )
-    hub = ProjectRunner(spark, project, persist_hubs=False).build()[
-        "orders_c"
-    ]
+    hub = ProjectRunner(spark, project).build()["orders_c"]
     flat = (
         hub.select(
             "o_orderkey", F.explode("c_items").alias("it")
@@ -485,7 +477,7 @@ def test_sub_source_rejects_lookups(spark, nested_parquet):
     from dataforge_core_spark.model import Rule
 
     sub.rules.append(Rule(name="bad", expression="SUM([orders_n].o_custkey)"))
-    runner = ProjectRunner(spark, project, persist_hubs=False)
+    runner = ProjectRunner(spark, project)
     with pytest.raises(ProjectError):
         runner.build()
 
@@ -610,9 +602,7 @@ def test_sub_source_sibling_refs(spark, sibling_parquet):
     from dataforge_core_spark.runner import ProjectRunner
 
     project = _sibling_project(sibling_parquet)
-    hub = ProjectRunner(spark, project, persist_hubs=False).build()[
-        "orders_s"
-    ]
+    hub = ProjectRunner(spark, project).build()["orders_s"]
     el = hub.schema["s_fees"].dataType.elementType
     assert [f.name for f in el.fields] == [
         "kind", "rate", "n_items", "fee_on_max_gross",
@@ -656,9 +646,7 @@ def test_sub_source_sibling_sql_artifact(spark, sibling_parquet, tmp_path):
     run_sql = emitter.emit_all(str(tmp_path))
     run_statements(spark, run_sql)
     sql_df = spark.table("hub_orders_s")
-    df = ProjectRunner(spark, project, persist_hubs=False).build()[
-        "orders_s"
-    ]
+    df = ProjectRunner(spark, project).build()["orders_s"]
     cols = sorted(df.columns)
     norm = lambda d: sorted(  # noqa: E731
         tuple(repr(r[c]) for c in cols) for r in d.collect()
@@ -680,7 +668,7 @@ def test_sub_source_sibling_cycle_rejected(spark, sibling_parquet):
         ],
     )
     with pytest.raises(ProjectError, match="[Cc]ircular sibling"):
-        ProjectRunner(spark, project, persist_hubs=False).build()
+        ProjectRunner(spark, project).build()
 
 
 def test_sub_source_sibling_unknown_attr(spark, sibling_parquet):
@@ -694,4 +682,4 @@ def test_sub_source_sibling_unknown_attr(spark, sibling_parquet):
         ],
     )
     with pytest.raises(ProjectError, match="no\\s+attribute 'nope'"):
-        ProjectRunner(spark, project, persist_hubs=False).build()
+        ProjectRunner(spark, project).build()

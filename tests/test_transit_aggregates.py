@@ -77,7 +77,7 @@ def test_third_source_transit_aggregate(spark, sf_dir):
         )
     )
     project = Project(sources=[part, li, orders], relations=rels)
-    hubs = ProjectRunner(spark, project, persist_hubs=False).build()
+    hubs = ProjectRunner(spark, project).build()
     got = {
         r["p_partkey"]: r["weighted_qty"]
         for r in hubs["p"].collect()
@@ -123,7 +123,7 @@ def test_this_transit_aggregate(spark, sf_dir):
         )
     )
     project = Project(sources=[part, li, orders], relations=rels)
-    hubs = ProjectRunner(spark, project, persist_hubs=False).build()
+    hubs = ProjectRunner(spark, project).build()
     got = {
         r["p_partkey"]: r["qty_when_cheap"] for r in hubs["p"].collect()
     }
@@ -168,4 +168,4 @@ def test_transit_unreachable_error(spark, sf_dir):
     )
     project = Project(sources=[part, li, orders], relations=rels)
     with pytest.raises(ProjectError):
-        ProjectRunner(spark, project, persist_hubs=False).build()
+        ProjectRunner(spark, project).build()
